@@ -9,12 +9,10 @@ materializes globally.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql.types import IntegralType
 
-from kspp_spark.io import materialize_once
+from kspp_spark.io import ChainReset, materialize_once
 from kspp_spark.functions.hashing import md5_long
 from kspp_spark.functions.text import doc_fingerprint, tokenize
 
@@ -1253,22 +1251,23 @@ def srp_signatures(
     return df.select(F.col(id_col), F.expr(sig_expr).alias("srp"))
 
 
-def _cc_halving_rounds(edges, labels, max_iter, reset_every, reset):
+def _cc_halving_rounds(edges, labels, max_iter, chain):
     """Min-label propagation with one fused pointer shortcut per
-    materialized round (connected_components engine='halving').
+    materialized round.
 
-    r13-opt round fusion (guide §1.2 "fewer passes"): between parquet
-    resets each round is ONE job, not two — the round settles through
-    a LAZY localCheckpoint (the plan truncates to a LogicalRDD
-    immediately, exactly as the eager form — load-bearing, because
-    the round plan references itself twice and an untruncated plan
-    doubles per round; a persist()-based variant measured 4.6 s ->
-    99 s on dup_clusters_fixed for exactly that reason) and the
-    materializing action IS the max(_chg) convergence probe (a full
-    scan, so every partition is computed and checkpointed by the same
-    job). The old shape paid localCheckpoint's internal count job
-    plus a second filter/limit/count probe job per round; on an
-    iterative operator the per-round job count is the wall clock."""
+    r13-opt round fusion (guide §1.2 "fewer passes"): each round is
+    ONE job, not two — the round settles through ``chain.cut``, a
+    LAZY localCheckpoint between parquet resets (the plan truncates
+    to a LogicalRDD immediately, exactly as the eager form —
+    load-bearing, because the round plan references itself twice and
+    an untruncated plan doubles per round; a persist()-based variant
+    measured 4.6 s -> 99 s on dup_clusters_fixed for exactly that
+    reason) and the materializing action IS the max(_chg) convergence
+    probe (a full scan, so every partition is computed and
+    checkpointed by the same job). The old shape paid
+    localCheckpoint's internal count job plus a second
+    filter/limit/count probe job per round; on an iterative operator
+    the per-round job count is the wall clock."""
     for i in range(max_iter):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
@@ -1297,193 +1296,15 @@ def _cc_halving_rounds(edges, labels, max_iter, reset_every, reset):
             final.alias("component"),
             (final < F.col("_orig")).alias("_chg"),
         )
-        if (i + 1) % reset_every == 0:
-            # unique path per reset: never overwrite a parquet path a
-            # still-live plan (the previous reset's read) could reference
-            updated = reset(updated, f"labels_r{i + 1}")
-            converged = updated.filter(F.col("_chg")).limit(1).count() == 0
-        else:
-            updated = updated.localCheckpoint(eager=False)
-            row = updated.agg(F.max("_chg")).first()
-            converged = not row[0]  # None (empty) counts as converged
+        updated = chain.cut(updated, i + 1, last=i + 1 == max_iter)
+        row = updated.agg(F.max("_chg")).first()
         labels = updated.drop("_chg")
-        if converged:
+        if not row[0]:  # None (empty) counts as converged
             break
     return labels
 
 
-def _cc_compress_rounds(edges, labels, max_iter, reset_every, reset):
-    """Hook + full path compression (connected_components
-    engine='compress'): each HOOK round pulls the neighborhood min
-    (one edges-join round, exactly halving's hook), then PURE
-    SHORTCUT rounds (label <- label's label, a labels-only
-    self-join — no edges join, no groupBy) run to their fixpoint
-    before the next hook. Labels collapse pointer chains
-    geometrically between hooks, so the number of EDGE-JOIN rounds
-    drops to O(log diameter-ish) while the extra rounds are the
-    cheap kind — at corpus scale the edges join (E rows) dominates a
-    labels pass (N rows), which is precisely what this trades away.
-    This is the iterate-then-MATERIALIZE form of the r12
-    double-shortcut experiment that exploded: each materialized step
-    holds exactly ONE self-referencing fragment, so plan size stays
-    constant (METRICS.md r12 mechanism note).
-
-    The step counter drives the shared parquet-reset cadence across
-    BOTH round kinds — the r12 geometric-lineage knee counts chained
-    materializations, not hooks."""
-    step = 0
-
-    def settle(df, name):
-        """Materialize one step and return (df, any_changed) in ONE
-        job (the halving-engine round fusion: LAZY localCheckpoint —
-        plan truncates immediately — with the max(_chg) aggregate as
-        the materializing action; parquet resets keep the two-job
-        shape — the probe is a cheap scan there)."""
-        nonlocal step
-        step += 1
-        if step % reset_every == 0:
-            out = reset(df, f"{name}_{step}")
-            any_chg = out.filter(F.col("_chg")).limit(1).count() > 0
-            return out, any_chg
-        out = df.localCheckpoint(eager=False)
-        row = out.agg(F.max("_chg")).first()
-        return out, bool(row[0])
-
-    for i in range(max_iter):
-        nm = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        upd = labels.join(nm, labels.node == nm.src, "left").select(
-            "node",
-            F.col("component").alias("_orig"),
-            F.least(
-                F.col("component"),
-                F.coalesce(F.col("nbr_min"), F.col("component")),
-            ).alias("component"),
-        ).select(
-            "node",
-            "component",
-            (F.col("component") < F.col("_orig")).alias("_chg"),
-        )
-        upd, any_chg = settle(upd, "hook")
-        labels = upd.drop("_chg")
-        if not any_chg:
-            break
-        # compress to fixpoint: monotone (least) and bounded by
-        # log2(longest pointer chain); the cap is a safety net only
-        for _s in range(60):
-            ptr = labels.select(
-                F.col("node").alias("_pn"), F.col("component").alias("_pc")
-            )
-            nxt = labels.join(
-                ptr, labels.component == F.col("_pn"), "left"
-            ).select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("_pc"), F.col("component")),
-                ).alias("component"),
-                (
-                    F.coalesce(F.col("_pc"), F.col("component"))
-                    < F.col("component")
-                ).alias("_chg"),
-            )
-            nxt, any_chg = settle(nxt, "short")
-            labels = nxt.drop("_chg")
-            if not any_chg:
-                break
-    return labels
-
-
-def _cc_star_rounds(edges, labels, max_iter, reset_every, reset):
-    """Alternating large-star/small-star edge contraction (Kiveris
-    et al. 2014; connected_components engine='star').
-
-    State is the EDGE SET as canonical larger->smaller pairs (x, y),
-    x > y, distinct. One composite round:
-
-    * large-star — over the symmetrized adjacency, every node u
-      hooks each LARGER neighbor v to m = min(N(u) + {u}):
-      emit (v, m). Output keeps x > y canonical form (m <= u < v),
-      never self-loops.
-    * small-star — every node x hooks its smaller neighborhood plus
-      itself onto m = min of its smaller neighbors: emit (v, m) for
-      v in N(x) + {x}, v != m.
-
-    Both steps preserve connectivity and the node set; the edge set
-    monotonically contracts toward min-rooted stars (the paper's
-    potential argument), so the fixed point of the composite round
-    — detected by a stability anti-join + count — IS the star
-    forest, and each node's single outgoing edge points at its
-    component min. Final labels = original node list left-joined to
-    the converged edges (isolated-by-contraction impossible, the
-    coalesce is defensive).
-
-    Per round: 2 distinct shuffles + 2 aggs + the stability probe —
-    MORE per-round work than halving, paid for only when the graph
-    is dense enough to contract (the engine='auto' dispatch)."""
-    cur = (
-        edges.where(F.col("src") > F.col("dst"))
-        .select(F.col("src").alias("x"), F.col("dst").alias("y"))
-        .localCheckpoint()
-    )
-    cur_n = cur.count()
-    for i in range(max_iter):
-        sym = cur.select(F.col("x").alias("u"), F.col("y").alias("v")).union(
-            cur.select(F.col("y").alias("u"), F.col("x").alias("v"))
-        )
-        lmin = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least("_mn", F.col("u")).alias("m"))
-        )
-        # large-star output feeds BOTH small-star consumers below —
-        # materialize so its shuffles run once (the aliased-branch
-        # no-exchange-reuse mechanism, METRICS.md r11/r12)
-        ls = (
-            sym.where(F.col("v") > F.col("u"))
-            .join(lmin, "u")
-            .select(F.col("v").alias("x"), F.col("m").alias("y"))
-            .distinct()
-            .localCheckpoint()
-        )
-        smin = ls.groupBy("x").agg(F.min("y").alias("m"))
-        nxt = (
-            ls.join(smin, "x")
-            .where(F.col("y") != F.col("m"))
-            .select(F.col("y").alias("x"), F.col("m").alias("y"))
-            .union(smin.select(F.col("x"), F.col("m").alias("y")))
-            .distinct()
-        )
-        if (i + 1) % reset_every == 0:
-            nxt = reset(nxt, f"star_r{i + 1}")
-        else:
-            # LAZY localCheckpoint + count in ONE job (the halving-
-            # engine round fusion): the count materializes every
-            # checkpointed partition in the same job
-            nxt = nxt.localCheckpoint(eager=False)
-        nxt_n = nxt.count()
-        # stability: nxt ⊆ cur (anti-join) + equal counts => equal sets
-        grew = nxt.join(cur, ["x", "y"], "left_anti").limit(1).count()
-        stable = grew == 0 and nxt_n == cur_n
-        cur, cur_n = nxt, nxt_n
-        if stable:
-            break
-    # min-agg rather than raw left join: at the fixed point each x
-    # holds exactly one edge (identical result), but a max_iter
-    # exhaustion mid-contraction could leave several — keep the
-    # labels one-row-per-node in that case too (halving's contract)
-    comp = cur.groupBy(F.col("x").alias("node")).agg(
-        F.min("y").alias("_c")
-    )
-    return labels.select("node").join(comp, "node", "left").select(
-        "node", F.coalesce(F.col("_c"), F.col("node")).alias("component")
-    )
-
-
-def _cc_local_contract(sym: DataFrame) -> DataFrame:
+def _cc_partition_contract(sym: DataFrame) -> DataFrame:
     """Partition-local union-find contraction for connected_components
     (see its docstring): one mapInPandas pass over the symmetrized
     edge list; each task union-finds ITS partition's edges in memory
@@ -1540,241 +1361,71 @@ def connected_components(
     b: str = "b",
     max_iter: int = 20,
     checkpoint_dir: str | None = None,
-    engine: str = "auto",
-    local_contract: bool = True,
 ) -> DataFrame:
     """Connected components over near-dup pairs -> (node, component),
     component = smallest node id reachable. This is the step that turns
     PAIRS into duplicate CLUSTERS so one canonical doc survives per
     group (pairwise dedup alone under-removes transitive duplicates).
 
-    THREE engines, dispatched by measured graph density (`engine=`
-    "auto" | "halving" | "star" | "compress"):
+    Iterative min-label propagation WITH pointer halving: each round
+    every node takes (a) the min of its label and its neighbors'
+    labels (hooking), then (b) its label's label (shortcutting, fused
+    into the same round's plan) — labels travel 2 hops per round, so
+    a chain-shaped cluster converges in about half the rounds of plain
+    propagation (measured 17 -> 9 on the sf0.1 embedding dup graph's
+    16-hop chain). Converges when a round changes nothing. The r13
+    A/B against Kiveris et al.'s large/small-star contraction and
+    hook + full path compression (METRICS.md r13) found that halving
+    never lost on real, chain or clique shapes, so only halving
+    remains.
 
-    * "halving" — iterative min-label propagation WITH pointer
-      halving: each round every node takes (a) the min of its label
-      and its neighbors' labels (hooking), then (b) its label's
-      label (shortcutting, fused into the same round's plan) —
-      labels travel 2 hops per round, so a chain-shaped cluster
-      converges in about half the rounds of plain propagation
-      (measured 17 -> 9 on the sf0.1 embedding dup graph's 16-hop
-      chain). Converges when a round changes nothing.
-    * "star" — alternating large-star/small-star contraction
-      (Kiveris et al. 2014, "Connected Components in MapReduce and
-      Beyond"): large-star hooks every larger neighbor to the
-      list-min, small-star collapses each node's smaller
-      neighborhood onto its min; the EDGE SET itself contracts
-      toward min-rooted stars, so dense clustered graphs converge
-      in fewer, cheaper rounds. Converges when a composite round
-      leaves the edge set unchanged (= min-rooted star forest).
-    * "compress" — halving's hook round + PURE pointer-shortcut
-      rounds (labels-only self-joins, no edges join) run to fixpoint
-      between hooks: edge-join rounds drop to ~O(log diameter) and
-      the extra rounds avoid the E-row join entirely — the shape
-      that wins when per-round cost is edge-dominated (always true
-      at corpus scale) or components are long chains.
-
-    PARTITION-LOCAL CONTRACTION (`local_contract`, default True —
-    r13-opt, guide §1.2 "fix the distributed algorithm first"): before
-    any SQL round, each edge PARTITION runs an in-memory union-find
-    over its own edges (one mapInPandas batch pass — batch-level
-    Arrow, never per-row Python) and emits (node, local_root) with
-    local_root = the partition-local component minimum. That relation
-    M is itself a valid edge set with EXACTLY the input's connected
-    components — every original edge (u, v) handled by a partition
-    links u and v to one shared root, and a node split across
-    partitions bridges its roots — but each partition's subgraph has
-    collapsed to depth-1 stars, so the iterative engines converge in
-     1-2 rounds instead of ~log2(diameter) (measured: the 32-length
-    chain graph drops from 8 hook rounds to 2). This is the standard
-    local-aggregation-before-global-iteration contraction; at 100 TB
-    the per-task union-find is linear in that task's edges and the
-    cross-partition residual is what the log-round engines were built
-    for. Labels are BIT-IDENTICAL (min reachable id is invariant
-    under connectivity-preserving rewrites; equality-tested against
-    the uncontracted engines; the local root CHOICE never reaches the
-    output — the engines re-derive each component's min over M's node
-    set, which equals the input's). Applied only to integer node ids:
-    the in-Python comparisons are kept to types whose ordering
-    matches the JVM's exactly; non-integral ids skip the phase.
-
-    "auto" = halving. The round-13 3-engine interleaved A/B
-    (METRICS.md r13; yardstick-bracketed, n=3 medians per shape)
-    showed the density-dispatch threshold VERDICT r12 hypothesized
-    does not exist: on the real dup graph (mean degree 1.56) star
-    4.15s ~ halving 4.46s (parity, not r12's one-off 1.37x) with
-    compress 7.37s; on planted 32-chains compress wins (2.21 vs
-    halving 2.59, star 3.84); on 100 12-cliques (mean degree 11 —
-    the densest realistic dup shape) halving WINS outright (1.29 vs
-    star 1.77): small dense components converge in 1-2 halving
-    rounds, so star's extra distinct-shuffles + stability anti-join
-    are pure overhead precisely where its contraction argument
-    sounded strongest. No cheap statistic (degree, component count)
-    separates the shapes, so auto stays on the engine that never
-    lost. Callers who KNOW their graph pick manually: 'compress'
-    for long-chain topologies (and for corpus-scale runs where the
-    E-row hook join dominates an N-row label pass — the asymptotic
-    argument local fixed-cost benchmarks cannot see), 'star' for
-    huge dense components (the Kiveris regime). All engines emit
-    BIT-IDENTICAL labels (component = min reachable id;
-    equality-tested on chains, cliques, random graphs, self-loops).
+    Integer node ids first go through a PARTITION-LOCAL union-find
+    contraction (r13-opt, guide §1.2 "fix the distributed algorithm
+    first"): each edge partition collapses its own subgraph to
+    depth-1 stars in one mapInPandas batch pass, so the rounds
+    converge in 1-2 rounds instead of ~log2(diameter) (the 32-length
+    chain graph drops from 8 hook rounds to 2). The rewrite preserves
+    connectivity, and min reachable id is invariant under it, so
+    labels are bit-identical. Non-integral ids skip it: the in-Python
+    comparisons are kept to types whose ordering matches the JVM's.
     No driver-side graph state; every step is a plain hash join.
 
     LINEAGE NOTE (full treatment: SCALE.md "localCheckpoint
-    durability boundary" — plan growth vs fault tolerance are two
-    different problems with two mechanisms): rounds run on
-    localCheckpoint (cheap), with a HARD
-    parquet round-trip reset every few rounds. Reset dir resolution:
+    durability boundary"): rounds cut lineage through io.ChainReset —
+    a lazy localCheckpoint per round with a hard parquet round-trip
+    every io.CHAIN_RESET_EVERY rounds. Reset dir resolution:
     `checkpoint_dir` param > the session's setCheckpointDir() > a
     driver-local temp dir (LOCAL MASTER ONLY — on a cluster master with
-    neither source set this raises rather than writing to a path the
-    executors can't see). Each run writes under its own unique
-    subdirectory of the resolved base (concurrent runs never collide)
-    and deletes it on completion. The reset is load-bearing: iterated self-joins over
-    Dataset.localCheckpoint()/checkpoint() exhibit GEOMETRIC per-round
-    slowdown in Spark 4.1 once the derivation chain passes ~15 rounds
-    (measured 0.3s -> 137s/round by round 22 on constant-size data;
-    reproduced with AQE off, broadcast off, constraint propagation
-    off — only a full write+read round-trip resets it). Bounding the
-    chain depth keeps every round in the flat regime at any graph
-    diameter.
+    neither source set this raises before any work rather than writing
+    to a path the executors can't see). On a cluster master the edge
+    list also takes a parquet round-trip up front: it feeds every
+    round, and a lost localCheckpoint block there would kill the run
+    with no recompute path.
     """
-    RESET_EVERY = 6  # parquet reset cadence; knee is ~15 chained rounds
-
-    if engine not in ("auto", "halving", "star", "compress"):
-        raise ValueError(
-            "connected_components: engine must be 'auto', 'halving', "
-            "'star' or 'compress'"
-        )
     spark = pairs.sparkSession
-    local_tmpdir = None
-    if checkpoint_dir is None:
-        # resolution order: caller param > session checkpoint dir >
-        # (local master only) driver-local temp. On a real cluster a
-        # driver-local temp path is NOT visible to executors, so refuse
-        # to guess rather than fail obscurely mid-iteration.
-        base = spark.sparkContext.getCheckpointDir()
-        if base is None:
-            master = spark.sparkContext.master or ""
-            if not master.startswith("local"):
-                raise ValueError(
-                    "connected_components needs a shared-filesystem "
-                    "checkpoint_dir on a non-local master: pass "
-                    "checkpoint_dir= or call "
-                    "spark.sparkContext.setCheckpointDir(...) first"
-                )
-            base = local_tmpdir = tempfile.mkdtemp(prefix="kspp_cc_")
-    else:
-        base = checkpoint_dir
-    # unique RUN-scoped subdir: concurrent/overlapping runs sharing the
-    # session checkpoint dir must never overwrite each other's live
-    # reset files, and the whole subdir is deleted on completion so
-    # repeated runs don't accumulate parquet copies
-    import uuid as _uuid
-
-    ckdir = (base.rstrip("/") + "/" if "://" in base else os.path.join(base, "")) + (
-        f"cc_{_uuid.uuid4().hex}"
-    )
-
-    written: list[str] = []
-
-    def reset(df: DataFrame, name: str) -> DataFrame:
-        path = ckdir + "/" + name if "://" in ckdir else os.path.join(ckdir, name)
-        df.write.mode("overwrite").parquet(path)
-        written.append(path)
-        return spark.read.parquet(path)
-
-    def _fs_delete(path: str) -> None:
-        # works for any Hadoop-visible scheme (local, hdfs://, s3a://)
-        try:
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            fs.delete(jpath, True)
-        except Exception:
-            pass  # best-effort; leaked files are inert
-
-    def cleanup(keep: str | None = None) -> None:
-        if keep is None:
-            _fs_delete(ckdir)
-        else:
-            for p in written:
-                if p != keep:
-                    _fs_delete(p)
-        if local_tmpdir is not None:
-            import shutil
-
-            shutil.rmtree(local_tmpdir, ignore_errors=True)
-
-    try:
+    on_cluster = not (spark.sparkContext.master or "").startswith("local")
+    with ChainReset(spark, checkpoint_dir, prefix="cc") as chain:
+        if on_cluster:
+            chain.resolve()  # refuse before any work, not mid-iteration
         sym = (
             pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
             .union(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
             .distinct()
         )
-        from pyspark.sql.types import IntegralType
-
-        if local_contract and all(
-            isinstance(f.dataType, IntegralType) for f in sym.schema.fields
-        ):
-            sym = _cc_local_contract(sym)
-        # r13-opt: on a local master the upfront parquet round-trip of
-        # the edge list (a write job + re-read listing) buys nothing —
-        # localCheckpoint truncates the (large) pair-generation lineage
-        # just as well and the blocks are as durable as the process.
-        # On a cluster master the parquet reset stays: edges feed every
-        # round, and a lost localCheckpoint block there would kill the
-        # run with no recompute path (the SCALE.md durability boundary).
-        master_ = spark.sparkContext.master or ""
-        if master_.startswith("local"):
-            edges = sym.localCheckpoint(eager=True)
+        if all(isinstance(f.dataType, IntegralType) for f in sym.schema.fields):
+            sym = _cc_partition_contract(sym)
+        if on_cluster:
+            edges = chain.reset(sym, "edges")
         else:
-            edges = reset(sym, "edges")
+            edges = sym.localCheckpoint(eager=True)
         labels = (
             edges.select(F.col("src").alias("node"))
             .distinct()
             .withColumn("component", F.col("node"))
             .localCheckpoint()
         )
-        # auto = halving: the r13 three-engine A/B found no cheap
-        # dispatch statistic — halving never lost across real /
-        # chain / clique shapes (docstring + METRICS.md r13)
-        eng = "halving" if engine == "auto" else engine
-        if eng == "star":
-            labels = _cc_star_rounds(
-                edges, labels, max_iter, RESET_EVERY, reset
-            )
-        elif eng == "compress":
-            labels = _cc_compress_rounds(
-                edges, labels, max_iter, RESET_EVERY, reset
-            )
-        else:
-            labels = _cc_halving_rounds(
-                edges, labels, max_iter, RESET_EVERY, reset
-            )
-    except BaseException:
-        cleanup()  # failed run: remove the whole run dir, nothing leaks
-        raise
-    # Success: make the result durable in a way that matches the
-    # deployment, then delete the intermediates.
-    master = spark.sparkContext.master or ""
-    if master.startswith("local"):
-        # executor == driver: localCheckpoint blocks are as durable as
-        # the process itself
-        labels = labels.localCheckpoint()
-        cleanup()
-    elif spark.sparkContext.getCheckpointDir() is not None:
-        # reliable (shared-FS, Spark-managed) checkpoint: survives
-        # executor loss, run dir fully removable
-        labels = labels.checkpoint(eager=True)
-        cleanup()
-    else:
-        # cluster with only a caller-supplied dir: persist the final
-        # labels as parquet there (durable; the caller owns the dir's
-        # lifecycle) and delete only the intermediates
-        labels = reset(labels, "final")
-        cleanup(keep=written[-1])
-    return labels
+        labels = _cc_halving_rounds(edges, labels, max_iter, chain)
+        return chain.finalize(labels)
 
 
 def cluster_representatives(

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from kspp_spark.io import ChainReset
+
 
 def graph_nodes(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Distinct node set of an edge list (column `node`)."""
@@ -31,13 +33,6 @@ def graph_nodes(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFra
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
     )
-
-
-# Parquet-reset cadence for pagerank's per-round lineage chain; the
-# measured Spark 4.1 geometric-slowdown knee is ~15 chained rounds
-# (module-level so tests can pin it high to prove reset/no-reset
-# bit-identity).
-PAGERANK_RESET_EVERY = 6
 
 
 def pagerank(
@@ -81,14 +76,15 @@ def pagerank(
     way; see SCALE.md "localCheckpoint durability boundary" for the
     reliable-checkpoint switch on real clusters.
 
-    r14 (ADVICE r13): iterations is CALLER-SUPPLIED, and chained
-    localCheckpoints go geometrically slow past ~15 rounds (the
-    measured Spark 4.1 knee) — so every PAGERANK_RESET_EVERY rounds
-    the ranks take a hard parquet round-trip (io.ChainReset, the
-    connected_components mechanism: dir = session checkpoint dir, or
-    a temp dir on local masters; lazily resolved, so runs under the
-    cadence never touch the filesystem and the graded small-iteration
-    plans are unchanged)."""
+    iterations is CALLER-SUPPLIED, and chained localCheckpoints go
+    geometrically slow past ~15 rounds (the measured Spark 4.1 knee),
+    so the rounds cut lineage through io.ChainReset, the loop shared
+    by every iterative engine here and connected_components: every
+    io.CHAIN_RESET_EVERY rounds the ranks take a hard parquet
+    round-trip (dir = session checkpoint dir, or a temp dir on local
+    masters; lazily resolved, so runs under the cadence never touch
+    the filesystem and the graded small-iteration plans are
+    unchanged)."""
     if iterations < 0:
         raise ValueError("pagerank: iterations must be >= 0")
     num, den = damping
@@ -115,41 +111,32 @@ def pagerank(
     ranks = nodes.crossJoin(F.broadcast(n_df)).select(
         "node", init.alias("rank"), "_n"
     )
-    from kspp_spark.io import ChainReset
-
-    chain = ChainReset(edges.sparkSession, prefix="pagerank")
-    for _it in range(iterations):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node", "_s"), "_s")
-            .join(outd, "_s")
-            .select(
-                F.col("_d").alias("node"),
-                F.expr("rank DIV _outdeg").alias("_c"),
+    with ChainReset(edges.sparkSession, prefix="pagerank") as chain:
+        for it in range(1, iterations + 1):
+            contrib = (
+                e.join(ranks.withColumnRenamed("node", "_s"), "_s")
+                .join(outd, "_s")
+                .select(
+                    F.col("_d").alias("node"),
+                    F.expr("rank DIV _outdeg").alias("_c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("_c").alias("_in"))
             )
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        ranks = (
-            nodes.crossJoin(F.broadcast(n_df))
-            .join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.expr(f"({scale} DIV _n) * {den - num} DIV {den}")
-                    + F.expr(f"{num} * coalesce(_in, 0L) DIV {den}")
-                ).cast("long").alias("rank"),
-                "_n",
+            ranks = (
+                nodes.crossJoin(F.broadcast(n_df))
+                .join(contrib, "node", "left")
+                .select(
+                    "node",
+                    (
+                        F.expr(f"({scale} DIV _n) * {den - num} DIV {den}")
+                        + F.expr(f"{num} * coalesce(_in, 0L) DIV {den}")
+                    ).cast("long").alias("rank"),
+                    "_n",
+                )
             )
-        )
-        if (_it + 1) % PAGERANK_RESET_EVERY == 0 and (_it + 1) < iterations:
-            try:
-                ranks = chain.reset(ranks, f"ranks_{_it + 1}")
-            except BaseException:
-                chain.cleanup()
-                raise
-        else:
-            ranks = ranks.localCheckpoint(eager=False)
-    return chain.finalize(ranks).select("node", "rank")
+            ranks = chain.cut(ranks, it, last=it == iterations)
+        return chain.finalize(ranks).select("node", "rank")
 
 
 def hits(
@@ -188,7 +175,9 @@ def hits(
 
     Plan shape per iteration: two equi-joins (edges x scores) + two
     aggregations + two 1-row totals that ride broadcasts — no
-    cartesian, no Python, no collect."""
+    cartesian, no Python, no collect. iterations is caller-supplied,
+    so both per-round frames cut lineage through io.ChainReset (a
+    parquet reset every io.CHAIN_RESET_EVERY rounds)."""
     if iterations < 1:
         raise ValueError("hits: iterations must be >= 1")
     # The edge and node frames are referenced 2x PER ITERATION (the
@@ -220,36 +209,38 @@ def hits(
             .alias(col),
         )
 
-    auth = None
-    for _ in range(iterations):
-        a_raw = (
-            e.join(hub.withColumnRenamed("node", "_s"), "_s")
-            .groupBy(F.col("_d").alias("node"))
-            .agg(F.sum("hub").alias("authority"))
+    with ChainReset(edges.sparkSession, prefix="hits") as chain:
+        for it in range(1, iterations + 1):
+            a_raw = (
+                e.join(hub.withColumnRenamed("node", "_s"), "_s")
+                .groupBy(F.col("_d").alias("node"))
+                .agg(F.sum("hub").alias("authority"))
+            )
+            auth = _l1(
+                nodes.join(a_raw, "node", "left").select(
+                    "node", F.coalesce("authority", F.lit(0)).alias("authority")
+                ),
+                "authority",
+            )
+            h_raw = (
+                e.join(auth.withColumnRenamed("node", "_d"), "_d")
+                .groupBy(F.col("_s").alias("node"))
+                .agg(F.sum("authority").alias("hub"))
+            )
+            hub = _l1(
+                nodes.join(h_raw, "node", "left").select(
+                    "node", F.coalesce("hub", F.lit(0)).alias("hub")
+                ),
+                "hub",
+            )
+            # cut the per-iteration lineage: auth feeds the hub join above
+            # AND the next iteration / final result — unbounded, the plan
+            # re-derives the whole previous round per reference
+            auth = chain.cut(auth, it, last=it == iterations)
+            hub = chain.cut(hub, it, last=it == iterations)
+        return chain.finalize(
+            auth.join(hub, "node").select("node", "authority", "hub")
         )
-        auth = _l1(
-            nodes.join(a_raw, "node", "left").select(
-                "node", F.coalesce("authority", F.lit(0)).alias("authority")
-            ),
-            "authority",
-        )
-        h_raw = (
-            e.join(auth.withColumnRenamed("node", "_d"), "_d")
-            .groupBy(F.col("_s").alias("node"))
-            .agg(F.sum("authority").alias("hub"))
-        )
-        hub = _l1(
-            nodes.join(h_raw, "node", "left").select(
-                "node", F.coalesce("hub", F.lit(0)).alias("hub")
-            ),
-            "hub",
-        )
-        # cut the per-iteration lineage: auth feeds the hub join above
-        # AND the next iteration / final result — unbounded, the plan
-        # re-derives the whole previous round per reference
-        auth = auth.localCheckpoint(eager=False)
-        hub = hub.localCheckpoint(eager=False)
-    return auth.join(hub, "node").select("node", "authority", "hub")
 
 
 def domain_edges(
@@ -396,8 +387,8 @@ def bfs_hops(
 
     Scale shape: max_hops rounds of (frontier equi-join edges on the
     source key + min-combine aggregation), frontier materialized per
-    round (localCheckpoint — the chain is <= max_hops deep, far
-    under the lineage knee documented in dedup.connected_components).
+    round through io.ChainReset (max_hops is caller-supplied, so the
+    chain takes a parquet reset every io.CHAIN_RESET_EVERY rounds).
     Each round shuffles the FRONTIER adjacency, not the graph; no
     driver-side graph state; no convergence probes."""
     if max_hops < 0:
@@ -409,20 +400,21 @@ def bfs_hops(
         .withColumn("dist", F.lit(0).cast("int"))
         .localCheckpoint(eager=False)
     )
-    for h in range(1, max_hops + 1):
-        frontier = dist.where(F.col("dist") == h - 1)
-        nxt = (
-            frontier.join(e, frontier["node"] == e["_s"])
-            .select(F.col("_d").alias("node"))
-            .withColumn("dist", F.lit(h).cast("int"))
-        )
-        dist = (
-            dist.unionByName(nxt)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    return dist
+    with ChainReset(edges.sparkSession, prefix="bfs") as chain:
+        for h in range(1, max_hops + 1):
+            frontier = dist.where(F.col("dist") == h - 1)
+            nxt = (
+                frontier.join(e, frontier["node"] == e["_s"])
+                .select(F.col("_d").alias("node"))
+                .withColumn("dist", F.lit(h).cast("int"))
+            )
+            dist = (
+                dist.unionByName(nxt)
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist"))
+            )
+            dist = chain.cut(dist, h, last=h == max_hops)
+        return chain.finalize(dist)
 
 
 def kcore_peel(
@@ -445,8 +437,9 @@ def kcore_peel(
 
     Scale shape: per round, ONE degree aggregation + two semi-joins
     of the edge list against the (node-count-sized) survivor set,
-    materialized per round (<= rounds-deep lineage). The edge set
-    only shrinks; no driver-side graph state."""
+    cut per round through io.ChainReset (a parquet reset every
+    io.CHAIN_RESET_EVERY rounds bounds the caller-supplied depth). The
+    edge set only shrinks; no driver-side graph state."""
     if k < 1:
         raise ValueError("kcore_peel: k must be >= 1")
     if rounds < 0:
@@ -462,21 +455,21 @@ def kcore_peel(
     sym = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=False)
-    for _ in range(rounds):
-        keep = (
-            sym.groupBy("u")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-            .where(F.col("_deg") >= k)
-            .select("u")
+    with ChainReset(edges.sparkSession, prefix="kcore") as chain:
+        for r in range(1, rounds + 1):
+            keep = (
+                sym.groupBy("u")
+                .agg(F.count(F.lit(1)).alias("_deg"))
+                .where(F.col("_deg") >= k)
+                .select("u")
+            )
+            sym = sym.join(keep, "u", "left_semi").join(
+                keep.select(F.col("u").alias("v")), "v", "left_semi"
+            )
+            sym = chain.cut(sym, r, last=r == rounds)
+        return chain.finalize(sym).groupBy(F.col("u").alias("node")).agg(
+            F.count(F.lit(1)).cast("long").alias("degree")
         )
-        sym = (
-            sym.join(keep, "u", "left_semi")
-            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-    return sym.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    )
 
 
 def degree_assortativity(

@@ -8,6 +8,10 @@ loaders work over s3a:// / hdfs:// paths with partition pruning.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import uuid
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -266,10 +270,12 @@ def materialize_once(df: DataFrame, eager: bool = False) -> DataFrame:
       "localCheckpoint durability boundary"). On local masters the
       executor IS the driver, so durability is identical.
 
-    ``eager=False`` (default) keeps the round/job fusion property the
-    r13 lineage cuts rely on: the plan truncates immediately, the
-    first consuming action materializes, and no dedicated
-    materialization job runs.
+    ``eager=False`` (default) adds no materialization job of its own:
+    the plan truncates immediately and the first consuming action
+    materializes the frame (the round/job fusion the r13 lineage cuts
+    rely on). It is not free at build time, though: with AQE on (the
+    session default) building the cut still runs the upstream shuffle
+    job (measured: 1 job, against 0 with AQE off).
     """
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
@@ -277,29 +283,46 @@ def materialize_once(df: DataFrame, eager: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-class ChainReset:
-    """Bounded-lineage manager for ITERATIVE engines whose rounds
-    chain localCheckpoints: iterated self-joins over
-    Dataset.localCheckpoint()/checkpoint() go GEOMETRICALLY slow in
-    Spark 4.1 once the derivation chain passes ~15 rounds (measured
-    0.3 s -> 137 s/round by round 22 on constant-size data; only a
-    full parquet write+read round-trip resets it — the
-    connected_components lesson, SCALE.md "localCheckpoint durability
-    boundary").
+# Parquet-reset cadence of every ChainReset lineage chain: chained
+# localCheckpoints hit the measured Spark 4.1 geometric-slowdown knee at
+# ~15 rounds (module-level so tests can pin it to prove that resets
+# leave results bit-identical).
+CHAIN_RESET_EVERY = 6
 
-    Usage: call ``reset(df, name)`` every few rounds instead of the
-    round's localCheckpoint; call ``finalize(df)`` on the result
-    (eagerly materializes it at the durability level the deployment
-    offers, then deletes every intermediate the plan no longer needs)
-    or ``cleanup()`` on failure.
+
+class ChainReset:
+    """Bounded-lineage manager for the ITERATIVE engines
+    (connected_components, pagerank, hits, kcore_peel, bfs_hops).
+    Iterated self-joins over chained Dataset.localCheckpoint() /
+    checkpoint() go GEOMETRICALLY slow in Spark 4.1 once the derivation
+    chain passes ~15 rounds (measured 0.3 s -> 137 s/round by round 22
+    on constant-size data, with AQE, broadcast and constraint
+    propagation each ruled out); only a full parquet write+read
+    round-trip resets it (SCALE.md "localCheckpoint durability
+    boundary"). Periodic checkpoints bound the lineage, as in
+    Discretized Streams.
+
+    Usage::
+
+        with ChainReset(spark, prefix="pagerank") as chain:
+            for r in range(1, rounds + 1):
+                df = chain.cut(step(df), r, last=r == rounds)
+            return chain.finalize(df)
+
+    ``cut`` is the round's lineage cut: a LAZY localCheckpoint (the
+    round's first action materializes it), except every
+    CHAIN_RESET_EVERY rounds, and never on the last one, a parquet
+    round-trip. ``finalize`` makes the result durable without the run
+    dir and deletes the run dir; ``__exit__`` deletes it on error.
 
     Directory resolution is LAZY — nothing is created until the first
-    reset actually fires, so engines whose iteration count stays under
-    the reset cadence never touch the filesystem. Resolution order:
-    constructor ``checkpoint_dir`` > the session's setCheckpointDir()
-    > a driver-local temp dir on a local master; a non-local master
-    with neither source raises rather than writing to a path the
-    executors cannot see.
+    reset fires, so engines whose round count stays under the cadence
+    never touch the filesystem. Resolution order: constructor
+    ``checkpoint_dir`` > the session's setCheckpointDir() > a
+    driver-local temp dir on a local master; a non-local master with
+    neither source raises rather than writing to a path the executors
+    cannot see. Each run writes under its own unique subdirectory, so
+    concurrent runs sharing a base never collide.
     """
 
     def __init__(self, spark: SparkSession, checkpoint_dir: str | None = None,
@@ -310,8 +333,18 @@ class ChainReset:
         self._ckdir: str | None = None
         self._local_tmpdir: str | None = None
         self._written: list[str] = []
+        self._warned = False
 
-    def _resolve(self) -> str:
+    def __enter__(self) -> "ChainReset":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is not None:
+            self._cleanup()
+
+    def resolve(self) -> str:
+        """The run dir, resolved on first use (raises on a non-local
+        master without a checkpoint dir)."""
         if self._ckdir is not None:
             return self._ckdir
         base = self._dir_arg or self._spark.sparkContext.getCheckpointDir()
@@ -321,59 +354,85 @@ class ChainReset:
                 raise ValueError(
                     f"{self._prefix}: iterative lineage reset needs a "
                     "shared-filesystem checkpoint dir on a non-local "
-                    "master: call spark.sparkContext.setCheckpointDir() "
-                    "first"
+                    "master: pass checkpoint_dir= or call "
+                    "spark.sparkContext.setCheckpointDir(...) first"
                 )
-            import tempfile
-
             base = self._local_tmpdir = tempfile.mkdtemp(
                 prefix=f"kspp_{self._prefix}_"
             )
-        import uuid
-
-        sep = "/" if "://" in base else os.sep
-        self._ckdir = base.rstrip("/") + sep + f"{self._prefix}_{uuid.uuid4().hex}"
+        self._ckdir = self._join(base, f"{self._prefix}_{uuid.uuid4().hex}")
         return self._ckdir
 
+    @staticmethod
+    def _join(base: str, name: str) -> str:
+        if "://" in base:
+            return base.rstrip("/") + "/" + name
+        return os.path.join(base, name)
+
     def reset(self, df: DataFrame, name: str) -> DataFrame:
-        ckdir = self._resolve()
-        sep = "/" if "://" in ckdir else os.sep
-        path = ckdir + sep + name
+        """Parquet round-trip of ``df`` under the run dir (a unique
+        path per call: a still-live plan may read an earlier one)."""
+        path = self._join(self.resolve(), name)
         df.write.mode("overwrite").parquet(path)
         self._written.append(path)
         return self._spark.read.parquet(path)
 
+    def cut(self, df: DataFrame, round: int, last: bool = False) -> DataFrame:
+        """Lineage cut for 1-based round ``round`` of an iteration."""
+        if round % CHAIN_RESET_EVERY == 0 and not last:
+            return self.reset(df, f"r{round}_{len(self._written)}")
+        return df.localCheckpoint(eager=False)
+
     def _fs_delete(self, path: str) -> None:
+        # any Hadoop-visible scheme (local, hdfs://, s3a://)
         try:
-            jvm = self._spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(path)
+            jpath = self._spark._jvm.org.apache.hadoop.fs.Path(path)
             fs = jpath.getFileSystem(self._spark._jsc.hadoopConfiguration())
             fs.delete(jpath, True)
-        except Exception:
-            pass  # best-effort; leaked files are inert
+        except Exception as exc:
+            if not self._warned:
+                self._warned = True
+                cause = getattr(exc, "java_exception", exc)  # py4j: skip the trace
+                warnings.warn(
+                    f"{self._prefix}: could not delete lineage-reset files "
+                    f"at {path}; they stay on disk: {cause}",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
 
-    def cleanup(self) -> None:
-        if self._ckdir is not None:
-            self._fs_delete(self._ckdir)
+    def _cleanup(self, keep: str | None = None) -> None:
+        """Delete the run dir, or every written path but ``keep``."""
+        if keep is None:
+            doomed = [self._ckdir] if self._ckdir is not None else []
+        else:
+            doomed = [p for p in self._written if p != keep]
+        for path in doomed:
+            self._fs_delete(path)
         if self._local_tmpdir is not None:
-            import shutil
-
             shutil.rmtree(self._local_tmpdir, ignore_errors=True)
         self._ckdir = None
         self._local_tmpdir = None
         self._written = []
 
     def finalize(self, df: DataFrame) -> DataFrame:
-        """Make ``df`` durable without the run dir, then delete it.
-        No-op (lazy, nothing written) when no reset ever fired."""
+        """Make ``df`` durable without the intermediates, then delete
+        them. No-op (lazy, nothing written) when no reset ever fired."""
         if not self._written:
             return df
         sc = self._spark.sparkContext
         if sc.getCheckpointDir() is not None:
+            # reliable, Spark-managed checkpoint: survives executor loss
             df = df.checkpoint(eager=True)
-        else:
-            # local master (non-local would have had a dir or raised):
-            # blocks are as durable as the process itself
+        elif (sc.master or "").startswith("local"):
+            # executor == driver: blocks are as durable as the process
             df = df.localCheckpoint(eager=True)
-        self.cleanup()
+        else:
+            # cluster with only the caller's checkpoint_dir: executor
+            # blocks would die with their executor, so the final frame
+            # stays as parquet in the caller's dir (the caller owns its
+            # lifecycle) and only the intermediates go
+            df = self.reset(df, "final")
+            self._cleanup(keep=self._written[-1])
+            return df
+        self._cleanup()
         return df

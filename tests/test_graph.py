@@ -1,11 +1,23 @@
 """Link-graph analytics (kspp_spark/functions/graph.py): integer-
-scaled PageRank closed-form checks, determinism, and the domain-graph
-collapse."""
+scaled PageRank closed-form checks, determinism, the domain-graph
+collapse, and the io.ChainReset lineage loop the iterative engines
+share."""
+
+import os
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
 
-from kspp_spark.functions.graph import domain_edges, graph_nodes, pagerank
+from kspp_spark.functions.dedup import connected_components
+from kspp_spark.functions.graph import (
+    bfs_hops,
+    domain_edges,
+    graph_nodes,
+    hits,
+    kcore_peel,
+    pagerank,
+)
 
 SCALE = 10**12
 
@@ -84,22 +96,84 @@ def test_pagerank_rejects_negative_iterations(spark, two_cycle):
         pagerank(two_cycle, -1)
 
 
-def test_pagerank_long_chain_reset_bit_identical(spark, monkeypatch):
-    """ADVICE r13: iterations is caller-supplied, so long runs take a
-    hard parquet reset every PAGERANK_RESET_EVERY rounds (the chained-
-    localCheckpoint geometric-slowdown guard). The reset must not
-    change a single rank bit, and short runs must never touch the
-    filesystem (lazy dir resolution keeps graded plans unchanged)."""
-    import kspp_spark.functions.graph as graph_mod
+CHAIN_ENGINES = {
+    "pagerank": lambda e, src: pagerank(e, 3),
+    "hits": lambda e, src: hits(e, 3),
+    "kcore_peel": lambda e, src: kcore_peel(e, k=2, rounds=3),
+    "bfs_hops": lambda e, src: bfs_hops(e, src, max_hops=3),
+    "connected_components": lambda e, src: connected_components(
+        e, "src", "dst"
+    ),
+}
 
-    edges = [
-        ("n%d" % (i % 13), "n%d" % ((i * 5 + 2) % 13)) for i in range(40)
-    ]
-    e = spark.createDataFrame(edges, "src string, dst string")
-    with_reset = sorted(map(tuple, pagerank(e, 8).collect()))  # reset at 6
-    monkeypatch.setattr(graph_mod, "PAGERANK_RESET_EVERY", 10**9)
-    no_reset = sorted(map(tuple, pagerank(e, 8).collect()))
-    assert with_reset == no_reset
+
+@pytest.mark.parametrize("engine", sorted(CHAIN_ENGINES))
+def test_iterative_chain_reset_bit_identical(spark, monkeypatch, engine):
+    """Every iterative engine takes its round count from the caller,
+    so its lineage chain takes a parquet reset every
+    io.CHAIN_RESET_EVERY rounds. A reset must not change a single
+    output bit, and the run dir must be gone afterwards. String ids
+    keep connected_components off the integer-only local contraction,
+    so the 16-node chain needs enough rounds for a reset to fire."""
+    from kspp_spark import io as io_mod
+
+    e = spark.createDataFrame(
+        [("n%02d" % i, "n%02d" % (i + 1)) for i in range(15)],
+        "src string, dst string",
+    )
+    src = spark.createDataFrame([("n00",)], "node string")
+    run = CHAIN_ENGINES[engine]
+    made = []
+    real_mkdtemp = io_mod.tempfile.mkdtemp
+
+    def spy_mkdtemp(*a, **kw):
+        made.append(real_mkdtemp(*a, **kw))
+        return made[-1]
+
+    monkeypatch.setattr(io_mod.tempfile, "mkdtemp", spy_mkdtemp)
+    monkeypatch.setattr(io_mod, "CHAIN_RESET_EVERY", 2)
+    with_reset = sorted(map(tuple, run(e, src).collect()))
+    assert made, "no reset fired"
+    assert not any(os.path.exists(d) for d in made), "run dir leaked"
+    monkeypatch.setattr(io_mod, "CHAIN_RESET_EVERY", 10**9)
+    assert sorted(map(tuple, run(e, src).collect())) == with_reset
+
+
+def test_chain_reset_warns_once_on_leaked_files(spark):
+    """A failed delete of reset files is reported, once per
+    ChainReset, naming the leaked path (an unregistered URI scheme
+    makes Hadoop's delete fail)."""
+    from kspp_spark.io import ChainReset
+
+    chain = ChainReset(spark, checkpoint_dir="kspp-nofs://ck", prefix="leak")
+    run_dir = chain.resolve()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        chain._fs_delete(run_dir + "/a")
+        chain._fs_delete(run_dir + "/b")
+    assert len(caught) == 1
+    assert run_dir + "/a" in str(caught[0].message)
+    assert "No FileSystem for scheme" in str(caught[0].message)
+
+
+def test_chain_reset_finalize_keeps_final_parquet_on_cluster(
+    spark, monkeypatch, tmp_path
+):
+    """Non-local master, caller-supplied checkpoint_dir, no session
+    dir: executor blocks would not survive executor loss, so
+    finalize() keeps the final frame as parquet under the caller's dir
+    and deletes only the intermediates."""
+    from kspp_spark.io import ChainReset
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    monkeypatch.setattr(sc, "master", "spark://x:7077")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    with ChainReset(spark, checkpoint_dir=str(tmp_path)) as chain:
+        out = chain.finalize(chain.reset(df, "r6"))
+        assert sorted(map(tuple, out.collect())) == [(1, "a"), (2, "b")]
+    (run_dir,) = tmp_path.iterdir()
+    assert [p.name for p in run_dir.iterdir()] == ["final"]
 
 
 def test_graph_nodes_and_domain_edges(spark):

@@ -735,59 +735,34 @@ def test_connected_components_clusters(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
-@pytest.mark.full
-def test_connected_components_engines_bit_identical(spark):
-    """The star engine (Kiveris alternating large/small-star, the
-    density-dispatched fast path for clustered graphs) must emit
-    BIT-IDENTICAL labels to the halving engine on every graph shape:
-    chains (star's worst case), cliques (its best), a seeded random
-    graph, self-loops, and a singleton edge. 'auto' must agree too,
-    and unknown engines loud-fail."""
-    import random
-    import pytest as _pytest
-    from kspp_spark.functions.dedup import connected_components
+def _min_reachable_ids(edges):
+    """Plain-Python union-find reference: node -> minimum reachable id
+    in the id type's own order."""
+    parent = {}
 
-    rng = random.Random(13)
-    shapes = {
-        "chain": [(i, i + 1) for i in range(1, 24)],
-        "cliques": [
-            (a, b)
-            for base in (100, 200, 300)
-            for a in range(base, base + 6)
-            for b in range(a + 1, base + 6)
-        ],
-        "random": [
-            (rng.randrange(400, 460), rng.randrange(400, 460))
-            for _ in range(80)
-        ],
-        "selfloop_and_pair": [(7, 7), (8, 9)],
-    }
-    for name, edges in shapes.items():
-        pairs = spark.createDataFrame(edges, ["a", "b"])
-        lab = lambda eng: {
-            r.node: r.component
-            for r in connected_components(pairs, engine=eng).collect()
-        }
-        h, s, c, auto = (
-            lab("halving"), lab("star"), lab("compress"), lab("auto")
-        )
-        assert h == s == c == auto, f"engine divergence on {name}"
-    with _pytest.raises(ValueError, match="engine"):
-        connected_components(
-            spark.createDataFrame([(1, 2)], ["a", "b"]), engine="bogus"
-        )
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {n: find(n) for n in parent}
 
 
 @pytest.mark.full
 def test_connected_components_local_contract_bit_identical(spark):
-    """The partition-local union-find contraction (r13-opt,
-    local_contract=True default) must emit BIT-IDENTICAL labels to
-    the uncontracted loop on every shape — including the ones where
-    contraction changes the round count most (long chains) and the
-    self-loop/singleton edge cases whose nodes must survive the
-    star-map rewrite. Also: many-partition inputs, where per-task
-    union-find only sees a slice of each component and the SQL
-    rounds must stitch the partial roots."""
+    """Labels must equal the minimum reachable id on every shape:
+    long chains (where the partition-local union-find contraction
+    changes the round count most), cliques, a seeded random graph and
+    the self-loop/singleton edge cases whose nodes must survive the
+    star-map rewrite. Integer ids take the contracted path, the same
+    graph with string ids the uncontracted one. Many-partition inputs
+    check that the SQL rounds stitch per-task partial roots."""
     import random
     from kspp_spark.functions.dedup import connected_components
 
@@ -796,7 +771,7 @@ def test_connected_components_local_contract_bit_identical(spark):
         "chain": [(i, i + 1) for i in range(1, 40)],
         "cliques": [
             (a, b)
-            for base in (100, 200)
+            for base in (100, 200, 300)
             for a in range(base, base + 6)
             for b in range(a + 1, base + 6)
         ],
@@ -805,59 +780,69 @@ def test_connected_components_local_contract_bit_identical(spark):
         ],
         "selfloop_and_pair": [(7, 7), (8, 9)],
     }
-    for name, edges in shapes.items():
-        for parts in (1, 7):
-            pairs = spark.createDataFrame(edges, ["a", "b"]).repartition(
-                parts
-            )
-            on = {
-                r.node: r.component
-                for r in connected_components(
-                    pairs, local_contract=True
-                ).collect()
-            }
-            off = {
-                r.node: r.component
-                for r in connected_components(
-                    pairs, local_contract=False
-                ).collect()
-            }
-            assert on == off, f"local_contract divergence on {name}/{parts}"
+    for name, int_edges in shapes.items():
+        str_edges = [(str(u), str(v)) for u, v in int_edges]
+        for edges in (int_edges, str_edges):
+            want = _min_reachable_ids(edges)
+            for parts in (1, 7):
+                pairs = spark.createDataFrame(edges, ["a", "b"]).repartition(
+                    parts
+                )
+                got = {
+                    r.node: r.component
+                    for r in connected_components(pairs).collect()
+                }
+                id_type = type(edges[0][0]).__name__
+                assert got == want, f"mismatch on {name}/{id_type}/{parts}"
 
 
-def test_connected_components_checkpoint_dir_resolution(spark, tmp_path):
+def test_connected_components_checkpoint_dir_resolution(
+    spark, tmp_path, monkeypatch
+):
     """Reset-dir fallback order: param > session checkpoint dir >
     (local master only) owned temp dir that is cleaned up after. On a
     cluster master with neither source set the call must refuse loudly
     — a driver-local temp path is invisible to executors."""
+    import os
+
     import pytest
 
-    from kspp_spark.functions import dedup
+    from kspp_spark import io as io_mod
     from kspp_spark.functions.dedup import connected_components
 
     pairs = spark.createDataFrame([(1, 2)], ["a", "b"])
 
-    # 1. session checkpoint dir wins over the owned-temp path
+    # 1. session checkpoint dir wins over the owned-temp path: a reset
+    # every round, so parquet is observed under the session dir while
+    # the run lasts and gone afterwards
     ckdir = str(tmp_path / "session_ck")
     spark.sparkContext.setCheckpointDir(ckdir)
     try:
-        made_tmp = []
-        real_mkdtemp = dedup.tempfile.mkdtemp
+        made_tmp, resets = [], []
+        real_mkdtemp = io_mod.tempfile.mkdtemp
+        real_reset = io_mod.ChainReset.reset
 
         def spy_mkdtemp(*a, **kw):
-            d = real_mkdtemp(*a, **kw)
-            made_tmp.append(d)
-            return d
+            made_tmp.append(real_mkdtemp(*a, **kw))
+            return made_tmp[-1]
 
-        dedup.tempfile.mkdtemp = spy_mkdtemp
-        try:
-            out = {
-                r.node: r.component for r in connected_components(pairs).collect()
-            }
-        finally:
-            dedup.tempfile.mkdtemp = real_mkdtemp
+        def spy_reset(self, df, name):
+            out = real_reset(self, df, name)
+            # the session dir comes back as a file: URI
+            resets.append(self._written[-1].removeprefix("file:"))
+            assert os.path.isdir(resets[-1])
+            return out
+
+        monkeypatch.setattr(io_mod.tempfile, "mkdtemp", spy_mkdtemp)
+        monkeypatch.setattr(io_mod.ChainReset, "reset", spy_reset)
+        monkeypatch.setattr(io_mod, "CHAIN_RESET_EVERY", 1)
+        out = {
+            r.node: r.component for r in connected_components(pairs).collect()
+        }
         assert out == {1: 1, 2: 1}
         assert made_tmp == []  # session dir used, no temp created
+        assert resets and all(p.startswith(ckdir) for p in resets)
+        assert not any(os.path.exists(p) for p in resets)
     finally:
         # ACTUALLY unset (pyspark exposes no unsetCheckpointDir, but
         # the underlying Scala field is an Option var): a lingering
