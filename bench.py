@@ -14,6 +14,7 @@ import os
 import statistics
 import sys
 import time
+import warnings
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -522,13 +523,28 @@ def main() -> None:
     local_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), fname
     )
+    emit_record(out, timings, BENCH_QUERIES, local_path)
+
+
+def emit_record(
+    out: dict, timings: dict[str, float], bench_queries: list[str],
+    local_path: str,
+) -> None:
+    """Write the full record to ``local_path``, then print the one
+    stdout line. A failed write (read-only checkout) warns on stderr,
+    naming the path, and the stdout line still carries the record."""
     try:
         with open(local_path, "w") as f:
             json.dump(out, f, indent=1)
             f.write("\n")
-    except OSError:
-        pass  # read-only checkout: stdout still carries the record
-    print(format_stdout_line(out, timings, BENCH_QUERIES), flush=True)
+    except OSError as exc:
+        warnings.warn(
+            f"bench: could not write the full record to {local_path} "
+            f"({exc}); only the stdout line carries it",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    print(format_stdout_line(out, timings, bench_queries), flush=True)
 
 
 def format_stdout_line(

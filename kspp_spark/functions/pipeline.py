@@ -815,9 +815,9 @@ def correlation_matrix(
     """Pairwise Pearson correlations over INTEGER-VALUED columns via
     exact moment sums — the profiling matrix a feature store runs
     next to profile_columns: one pass computes n and the
-    sum/sum-of-product moments for every column pair in DECIMAL(38,0)
-    (exact at any corpus size; int64 sums of products would ANSI-
-    overflow), then r = (n*Sxy - Sx*Sy) /
+    sum/sum-of-product moments for every column pair — each row's
+    product in int64, the sums in DECIMAL(38,0) (exact at any corpus
+    size) — then r = (n*Sxy - Sx*Sy) /
     (sqrt(n*Sxx - Sx^2) * sqrt(n*Syy - Sy^2)) evaluates as ONE
     order-fixed double expression over those exact moments — IEEE
     sqrt is correctly rounded, so the value replays bit-for-bit in
@@ -826,6 +826,12 @@ def correlation_matrix(
     the repo-wide sketch-consumer contract); rows with a NULL in ANY
     requested column are excluded so every pair sees the same n
     (listwise deletion, the textbook correlation-matrix convention).
+
+    Input contract: every value has at most 9 digits (|v| < 10^9), so
+    a row's product stays below 10^18 and fits int64. A larger product
+    raises Spark's ANSI arithmetic-overflow error (ANSI mode is the
+    Spark 4 default); with ``spark.sql.ansi.enabled=false`` it would
+    wrap silently.
 
     Returns (col_x, col_y, n, r) for the strict upper triangle
     (col_x < col_y in list order); r is NULL for zero-variance

@@ -283,6 +283,27 @@ def materialize_once(df: DataFrame, eager: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+def fs_delete(spark: SparkSession, path: str, what: str,
+              warn: bool = True) -> bool:
+    """Recursively delete ``path`` through Hadoop's FileSystem (any
+    Hadoop-visible scheme: local, hdfs://, s3a://). A failed delete
+    leaves the files on disk: returns False and, when ``warn``, warns
+    naming ``what`` and the path."""
+    try:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
+        return True
+    except Exception as exc:
+        if warn:
+            cause = getattr(exc, "java_exception", exc)  # py4j: skip the trace
+            warnings.warn(
+                f"could not delete {what} at {path}, left on disk: {cause}",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+        return False
+
+
 # Parquet-reset cadence of every ChainReset lineage chain: chained
 # localCheckpoints hit the measured Spark 4.1 geometric-slowdown knee at
 # ~15 rounds (module-level so tests can pin it to prove that resets
@@ -384,21 +405,10 @@ class ChainReset:
         return df.localCheckpoint(eager=False)
 
     def _fs_delete(self, path: str) -> None:
-        # any Hadoop-visible scheme (local, hdfs://, s3a://)
-        try:
-            jpath = self._spark._jvm.org.apache.hadoop.fs.Path(path)
-            fs = jpath.getFileSystem(self._spark._jsc.hadoopConfiguration())
-            fs.delete(jpath, True)
-        except Exception as exc:
-            if not self._warned:
-                self._warned = True
-                cause = getattr(exc, "java_exception", exc)  # py4j: skip the trace
-                warnings.warn(
-                    f"{self._prefix}: could not delete lineage-reset files "
-                    f"at {path}; they stay on disk: {cause}",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
+        # warns once per ChainReset, not once per leaked path
+        if not fs_delete(self._spark, path, f"{self._prefix} lineage-reset files",
+                         warn=not self._warned):
+            self._warned = True
 
     def _cleanup(self, keep: str | None = None) -> None:
         """Delete the run dir, or every written path but ``keep``."""

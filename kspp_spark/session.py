@@ -9,8 +9,54 @@ executor cores on a real cluster (or left to AQE's initial value).
 from __future__ import annotations
 
 import os
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def _archive_key(path: str) -> tuple[int, int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def skip_unchanged_zip_reloads() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    central directory only when the archive changed since that importer
+    last read it (its ``(st_ino, st_mtime_ns, st_size)`` differs).
+
+    Spark's Python worker calls ``importlib.invalidate_caches()`` at the
+    start of EVERY task (``worker_util.setup_spark_files``). On CPython
+    3.11 that re-reads the whole directory of each cached zipimporter: a
+    worker holds 16 (pyspark.zip and its subpackage paths, the Spark
+    core jar on its PYTHONPATH, py4j), 120-195 ms per task whatever the
+    data size: a large share of ``rate_limit_stream``'s per-trigger
+    floor.
+
+    Importing ``kspp_spark`` runs this, so it covers the driver and every
+    worker that unpickles a UDF referencing a kspp_spark module global,
+    from that worker's next task on. An importer carries no key until
+    its first read under the wrapper, so that first call still re-reads;
+    a missing archive always re-reads (the original then drops it).
+    Idempotent."""
+    reload = zipimport.zipimporter.invalidate_caches
+    if getattr(reload, "_kspp_skips_unchanged", False):
+        return
+
+    def invalidate_caches(self) -> None:
+        # stat before the read: a change during the read shows next call
+        key = _archive_key(self.archive)
+        if key is None or key != getattr(self, "_kspp_archive_key", None):
+            reload(self)
+            self._kspp_archive_key = key
+
+    invalidate_caches._kspp_skips_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+skip_unchanged_zip_reloads()
 
 
 def prometheus_metrics_conf() -> dict[str, str]:

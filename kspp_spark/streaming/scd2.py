@@ -27,6 +27,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from kspp_spark.io import fs_delete
 from kspp_spark.operators.aggregates import scd2_history
 from kspp_spark.streaming.epochs import epoch_dirs
 
@@ -125,14 +126,10 @@ def scd2_fold_batch(
     )
     # (the localCheckpoint blocks are released by the ContextCleaner
     # once `versioned` goes out of scope — no explicit unpersist)
-    # prune old state snapshots (each is self-contained)
+    # prune old state snapshots (each is self-contained); a failed
+    # delete only warns: stale snapshots are inert
     for e, p in epochs[:-keep_state_epochs] if keep_state_epochs else []:
-        try:
-            jvm = spark._jvm
-            jp = jvm.org.apache.hadoop.fs.Path(p)
-            jp.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jp, True)
-        except Exception:
-            pass  # best-effort; stale snapshots are inert
+        fs_delete(spark, p, "an old scd2 state snapshot")
 
 
 def scd2_stream(

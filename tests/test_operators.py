@@ -5027,6 +5027,22 @@ def test_correlation_matrix_exact(spark):
         correlation_matrix(df, ["a", "a"])
 
 
+def test_correlation_matrix_overflow_is_loud(spark):
+    """Per-row products are int64 (only the sums are decimal): a
+    10-digit x 10-digit row breaks the <=9-digit input contract and
+    raises Spark's ANSI overflow error instead of a wrapped r."""
+    from pyspark.errors import ArithmeticException
+
+    from kspp_spark.functions.pipeline import correlation_matrix
+    import pytest as _pytest
+
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (9_999_999_999, 9_999_999_999)], "a long, b long"
+    )
+    with _pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        correlation_matrix(df, ["a", "b"]).collect()
+
+
 def test_ewma_matches_python_fold(spark):
     """EWMA equals the Python left-assoc weighted sum bit-for-bit
     (the fixed-order contract), renormalizes over present lags at

@@ -1,4 +1,5 @@
-"""Session-factory conf wiring (observability opt-in).
+"""Session-factory conf wiring (observability opt-in) and the
+per-task zip-directory reload guard that importing kspp_spark installs.
 
 Parity target: the reference pushes metrics through
 prometheus_pushgateway_utils (utils/prometheus_pushgateway_utils.h);
@@ -9,8 +10,13 @@ second real session can't be created inside the suite, and getOrCreate
 on an existing one silently drops static confs).
 """
 
+import os
+import sys
+import zipfile
+import zipimport
+
 import kspp_spark.session as session_mod
-from kspp_spark.session import prometheus_metrics_conf
+from kspp_spark.session import prometheus_metrics_conf, skip_unchanged_zip_reloads
 
 
 def test_prometheus_conf_mapping():
@@ -76,3 +82,86 @@ def test_get_spark_default_leaves_metrics_off(monkeypatch):
     record = _confs_submitted(monkeypatch)
     assert "spark.ui.prometheus.enabled" not in record
     assert record["spark.ui.enabled"] == "false"
+
+
+def test_zip_reload_skipped_while_archive_unchanged(tmp_path, monkeypatch):
+    """invalidate_caches() re-reads an archive's directory only when the
+    archive changed since that importer's last read; installing twice
+    keeps the one wrapper."""
+    guard = zipimport.zipimporter.invalidate_caches
+    skip_unchanged_zip_reloads()
+    assert zipimport.zipimporter.invalidate_caches is guard
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("old_mod.py", "X = 1\n")
+    monkeypatch.delitem(zipimport._zip_directory_cache, archive, raising=False)
+    importer = zipimport.zipimporter(archive)
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting(path):
+        reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    importer.invalidate_caches()  # no key yet: reads and records one
+    importer.invalidate_caches()
+    assert reads == [archive]
+    assert importer.find_spec("new_mod") is None
+
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("old_mod.py", "X = 1\n")
+        z.writestr("new_mod.py", "Y = 2\n")
+    importer.invalidate_caches()
+    assert reads == [archive, archive]
+    assert importer.find_spec("new_mod") is not None
+    zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_zip_reload_guard_reaches_python_workers(spark):
+    """A UDF that references a kspp_spark module global installs the
+    guard in its Python worker when unpickled, so on a reused worker the
+    per-task importlib.invalidate_caches() stops re-reading pyspark.zip,
+    the Spark jar and py4j: from the worker's third task on, zero
+    directory reads. Each task reports the reads made since the previous
+    task on its worker (the idle-worker queue rotates, so jobs run until
+    one worker has been seen three times)."""
+    import pandas as pd
+
+    def probe(batches):
+        assert prometheus_metrics_conf  # a kspp_spark global
+        seen = getattr(zipimport, "_probe_reads", None)
+        if seen is None:
+            read_directory = zipimport._read_directory
+
+            def counting(path):
+                zipimport._probe_reads += 1
+                return read_directory(path)
+
+            zipimport._read_directory = counting
+        zipimport._probe_reads = 0
+        for _ in batches:
+            pass
+        yield pd.DataFrame({
+            "pid": [os.getpid()],
+            "reads": [-1 if seen is None else seen],
+            "archives": [sum(isinstance(f, zipimport.zipimporter)
+                             for f in sys.path_importer_cache.values())],
+            "guarded": [getattr(zipimport.zipimporter.invalidate_caches,
+                                "_kspp_skips_unchanged", False)],
+        })
+
+    one_task = spark.range(1).coalesce(1)
+    schema = "pid long, reads long, archives long, guarded boolean"
+    tasks = {}
+    for _ in range(40):
+        r = one_task.mapInPandas(probe, schema).collect()[0]
+        tasks.setdefault(r.pid, []).append(r)
+        if len(tasks[r.pid]) == 3:
+            break
+    worker = tasks[r.pid]
+    assert len(worker) == 3, "no Python worker was reused three times"
+    assert all(t.guarded for t in worker)
+    assert worker[2].archives > 0
+    assert worker[2].reads == 0

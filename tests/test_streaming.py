@@ -1191,6 +1191,36 @@ def test_scd2_fold_refuses_reset_when_only_history_retained(spark, tmp_path):
         scd2_fold_batch(b, 0, state, hist, key="key", value_cols=["value"])
 
 
+def test_scd2_fold_warns_when_snapshot_prune_fails(spark, tmp_path, monkeypatch):
+    """A state snapshot that cannot be pruned is reported in one warning
+    naming its path (an unregistered URI scheme makes Hadoop's delete
+    fail), and the fold still writes its own epoch."""
+    import warnings
+
+    from kspp_spark.streaming import scd2
+
+    state = str(tmp_path / "state")
+    hist = str(tmp_path / "hist")
+    schema = "key string, value string, event_time timestamp"
+    b = spark.createDataFrame([("a", "v1", ts(1))], schema)
+    scd2.scd2_fold_batch(b, 1, state, hist, key="key", value_cols=["value"])
+    leaked = "kspp-nofs://scd2/state/epoch=0"
+    listed = scd2._epoch_dirs
+
+    def with_unprunable(spark_, base):
+        extra = [(0, leaked)] if base == state else []
+        return extra + listed(spark_, base)
+
+    monkeypatch.setattr(scd2, "_epoch_dirs", with_unprunable)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        scd2.scd2_fold_batch(b, 2, state, hist, key="key", value_cols=["value"],
+                             keep_state_epochs=1)
+    assert len(caught) == 1
+    assert leaked in str(caught[0].message)
+    assert [e for e, _ in listed(spark, state)] == [1, 2]
+
+
 def test_scd2_snapshot_bigint_event_time(spark, tmp_path):
     """scd2_snapshot must derive the open set's NULL valid_to cast
     from valid_from's actual type — a bigint epoch-millis changelog

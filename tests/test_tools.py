@@ -394,3 +394,21 @@ def test_bench_stdout_envelope_survives_truncation():
     assert "queries_truncated" not in parsed2
     assert parsed2["queries"] == small
     assert parsed2["degraded"] is True
+
+
+def test_bench_unwritable_record_warns_and_still_prints(tmp_path, capsys):
+    """A BENCH_LOCAL write that fails warns on stderr, naming the path,
+    and the one stdout line is still printed."""
+    import json
+
+    import bench
+
+    timings = {"q1": 1.5}
+    out = {"metric": "sum_median_query_sec", "value": 1.5, "sf": 0.1,
+           "runs": 1, "degraded": False, "load_avg_start": 0.2}
+    unwritable = str(tmp_path / "no_such_dir" / "BENCH_LOCAL.json")
+    with pytest.warns(RuntimeWarning, match="no_such_dir/BENCH_LOCAL.json"):
+        bench.emit_record(out, timings, ["q1"], unwritable)
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1
+    assert json.loads(lines[0])["queries"] == timings
