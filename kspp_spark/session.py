@@ -4,6 +4,26 @@ Local testing runs on local[N]; the same conf scales to a cluster —
 AQE handles runtime re-planning (skew joins, partition coalescing),
 shuffle partitions default to cores locally but should be ~2-3x total
 executor cores on a real cluster (or left to AQE's initial value).
+
+Streaming checkpoints: `get_spark` sets
+``spark.sql.streaming.checkpointFileManagerClass`` to Spark's
+``FileSystemBasedCheckpointFileManager``. pip-installed pyspark has no
+libhadoop, so Hadoop's local file system shells out. Spark's default
+``FileContextBasedCheckpointFileManager`` renames each checkpoint file
+through ``FileContext.rename``, whose link-status checks fork
+``readlink`` 8 times per atomic write (plus 2 ``chmod``). At about 11
+writes per trigger (offset, commit and source logs; a state delta and a
+checksum file per partition) that was about 88 ``readlink`` processes
+per trigger: 5,304 in a 60-trigger ``ktable_stream`` run, and most of
+the state-commit and WAL time. The FileSystem manager renames with
+``FileSystem.rename`` (``File.renameTo``) and forks none; on ``file:``
+both managers check the destination is absent, then make one POSIX
+``rename(2)``, and Spark's state checksum files and Hadoop's ``.crc``
+files are still written and verified. Sessions built elsewhere (a plain
+``SparkSession.builder``, spark-submit on a cluster) keep Spark's default
+FileContext manager, the atomic rename-if-absent one on HDFS. The 2
+``chmod`` forks per created file remain with either manager: they come
+from ``RawLocalFileSystem.setPermission`` without NativeIO.
 """
 
 from __future__ import annotations
@@ -106,6 +126,14 @@ def get_spark(
         # testdata events.parquet carries TIMESTAMP(NANOS); read as long
         # and convert in io.load (Spark has no native nanos type).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Spark's default FileContext checkpoint manager forks `readlink`
+        # 8 times per checkpoint file without libhadoop (about 88 per
+        # trigger); this one renames with File.renameTo and forks none.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     if metrics_prometheus:
         for k, v in prometheus_metrics_conf().items():

@@ -12,11 +12,42 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
+def _event_time_watermarks(df: DataFrame) -> list:
+    """Every EventTimeWatermark node of `df`'s analyzed plan (a batch
+    plan has none: analysis removes them)."""
+    found, todo = [], [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "EventTimeWatermark":
+            found.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
 def with_watermark(df: DataFrame, event_time: str, delay: str) -> DataFrame:
     """The reference's min_buffering_ms: out-of-orderness tolerated up
     to `delay`; older records are late (dropped by stateful ops —
-    mem_windowed_store.h:132-135's late-data drop)."""
-    return df.withWatermark(event_time, delay)
+    mem_windowed_store.h:132-135's late-data drop).
+
+    Composable: Spark refuses to start a query that redefines a
+    watermark, so an input that already carries one on `event_time`
+    with the same delay is returned as is, and a different column or
+    delay raises ValueError naming both."""
+    existing = _event_time_watermarks(df)
+    if not existing:
+        return df.withWatermark(event_time, delay)
+    intervals = df.sparkSession._jvm.org.apache.spark.sql.catalyst.util.IntervalUtils
+    wanted = intervals.fromIntervalString(delay)
+    for node in existing:
+        column, have = node.eventTime().name(), node.delay()
+        if column != event_time or not have.equals(wanted):
+            raise ValueError(
+                f"input already has a watermark on {column!r} with delay "
+                f"{have.toString()!r}; cannot redefine it as {event_time!r} "
+                f"with delay {delay!r}"
+            )
+    return df
 
 
 ROCKSDB_PROVIDER = (
@@ -91,7 +122,7 @@ def windowed_count_stream(
     watermark passes; late records beyond the delay are dropped
     (exactly the reference's oldest-kept-slot drop)."""
     keys = [] if key is None else ([key] if isinstance(key, str) else list(key))
-    wm = df.withWatermark(event_time, watermark_delay)
+    wm = with_watermark(df, event_time, watermark_delay)
     w = F.window(F.col(event_time), slot_width)
     return (
         wm.groupBy(w.alias("_w"), *keys)
@@ -123,7 +154,7 @@ def dedup_stream(
     ks = [keys] if isinstance(keys, str) else list(keys)
     if watermark_delay is None:
         return df.dropDuplicates(ks)
-    return df.withWatermark(event_time, watermark_delay).dropDuplicatesWithinWatermark(ks)
+    return with_watermark(df, event_time, watermark_delay).dropDuplicatesWithinWatermark(ks)
 
 
 def stream_stream_join(
@@ -138,6 +169,6 @@ def stream_stream_join(
     """Watermarked stream-stream join — the scalable form of the
     reference's co-partitioned stream joins when BOTH sides update.
     State is bounded by the watermark delay on each side."""
-    l = left.withWatermark(event_time_left, delay)
-    r = right.withWatermark(event_time_right, delay)
+    l = with_watermark(left, event_time_left, delay)
+    r = with_watermark(right, event_time_right, delay)
     return l.join(r, on=on, how=how)

@@ -1,4 +1,5 @@
-"""Session-factory conf wiring (observability opt-in) and the
+"""Session-factory conf wiring (observability opt-in, the streaming
+checkpoint file manager and the state checksums it keeps) and the
 per-task zip-directory reload guard that importing kspp_spark installs.
 
 Parity target: the reference pushes metrics through
@@ -165,3 +166,52 @@ def test_zip_reload_guard_reaches_python_workers(spark):
     assert all(t.guarded for t in worker)
     assert worker[2].archives > 0
     assert worker[2].reads == 0
+
+
+def test_get_spark_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """Streaming checkpoint files go through Spark's FileSystem-based
+    manager (File.renameTo, no forked `readlink` per rename), resolved
+    the way the streaming engine resolves it: from the session's Hadoop
+    conf."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
+def test_state_checksums_survive_the_checkpoint_manager(spark, tmp_path):
+    """After a 2-trigger ktable_stream run the state dir of every
+    partition still holds Spark's per-version checksum files
+    (`<v>.delta.crc`) and Hadoop's `.crc` of each delta file."""
+    import datetime
+
+    from kspp_spark.streaming.core import ktable_stream
+
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    sch = "key string, value long, event_time timestamp"
+    for v in (1, 2):
+        spark.createDataFrame(
+            [(k, v, datetime.datetime(2024, 1, 1, 0, 0, v)) for k in "abcdefgh"], sch
+        ).coalesce(1).write.mode("append").parquet(in_dir)
+    src = spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(in_dir)
+    q = (
+        ktable_stream(src, "key", ["value"])
+        .writeStream.format("noop")
+        .option("checkpointLocation", ckpt)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert len(q.recentProgress) == 2
+    parts = [p for p in (tmp_path / "ckpt" / "state" / "0").iterdir()
+             if p.name.isdigit()]
+    assert parts
+    for part in parts:
+        names = {f.name for f in part.iterdir()}
+        for v in (1, 2):
+            assert {f"{v}.delta", f"{v}.delta.crc", f".{v}.delta.crc"} <= names, (
+                part, sorted(names))

@@ -339,6 +339,66 @@ def test_rate_limit_stream_recovers_from_checkpoint(spark, stream_dir, tmp_path)
     assert vals == [1, 2]  # 3 and 4 rejected by the recovered bucket
 
 
+def test_ktable_stream_recovers_from_checkpoint(spark, stream_dir, tmp_path):
+    """JVM-state restart: run 1 folds file 1 and stops; file 2 arrives
+    and run 2 resumes on the same checkpoint. Every row run 2 emits is
+    the last-write-wins fold by (event_time, seq) of BOTH files — a
+    stale update to a key from run 1 re-emits the recovered winner —
+    and the per-key fold of all emitted rows equals that of the input.
+    A foreachBatch sink appends each batch to parquet (a memory sink
+    cannot recover)."""
+    import pandas as pd
+
+    sch = "key string, seq long, value long, event_time timestamp"
+    ckpt, out_dir = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    file1 = [("a", 1, 10, ts(5)), ("b", 2, 20, ts(3)), ("b", 3, 21, ts(3)),
+             ("c", 4, 30, ts(1))]
+    file2 = [("a", 5, 11, ts(9)),   # updates a
+             ("b", 6, 22, ts(2)),   # stale: b@3 (seq 3) stays
+             ("d", 7, 40, ts(4))]   # new key
+
+    def append(batch, batch_id):
+        batch.withColumn("batch_id", F.lit(batch_id)).write.mode(
+            "append").parquet(out_dir)
+
+    def run_once():
+        src = spark.readStream.schema(sch).parquet(stream_dir)
+        q = (
+            ktable_stream(src, "key", ["seq", "value"])
+            .writeStream.foreachBatch(append)
+            .option("checkpointLocation", ckpt)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    def lww(rows):
+        df = pd.DataFrame(rows, columns=["key", "seq", "value", "event_time"])
+        last = df.sort_values(["event_time", "seq"]).groupby("key").tail(1)
+        return {r.key: (r.seq, r.value) for r in last.itertuples()}
+
+    spark.createDataFrame(file1, sch).coalesce(1).write.parquet(stream_dir)
+    run_once()
+    time.sleep(1.1)  # distinct file mtimes
+    spark.createDataFrame(file2, sch).coalesce(1).write.mode("append").parquet(
+        stream_dir
+    )
+    run_once()
+
+    out = spark.read.parquet(out_dir).toPandas()
+    first = out.batch_id.min()
+    assert lww(out[out.batch_id == first][["key", "seq", "value", "event_time"]]) == lww(file1)
+    both = lww(file1 + file2)
+    run2 = out[out.batch_id > first]
+    assert {r.key: (r.seq, r.value) for r in run2.itertuples()} == {
+        k: both[k] for k in ("a", "b", "d")
+    }
+    assert lww(out[["key", "seq", "value", "event_time"]]) == both
+    assert both["a"] == (5, 11) and both["b"] == (3, 21)
+
+
 def test_count_punctuate_full_snapshot(spark, stream_dir):
     """Punctuate parity (count.h:92-101): the reference periodically
     emits the FULL counter snapshot, not deltas. Spark's complete
@@ -442,6 +502,50 @@ def test_dedup_stream_within_watermark(spark, stream_dir):
     q.stop()
     # one survivor per key; which duplicate wins is batch-order defined
     assert sorted(r.key for r in rows) == ["a", "b"]
+
+
+def test_dedup_then_windowed_count_composes_watermarks(spark, stream_dir):
+    """windowed_count_stream over dedup_stream with the same watermark
+    reuses dedup's watermark instead of redefining it (which Spark
+    refuses at start), and counts each deduplicated event once. A late
+    flush event advances the watermark so both windows close."""
+    import datetime
+
+    from kspp_spark.streaming.core import _event_time_watermarks, dedup_stream
+
+    rows = [("e1", 1, ts(1)), ("e1", 1, ts(1)), ("e2", 1, ts(2)),
+            ("e3", 1, ts(31)), ("e3", 1, ts(31)), ("e3", 1, ts(31)),
+            ("e4", 1, ts(40)),
+            ("flush", 1, datetime.datetime(2024, 1, 1, 0, 3, 20))]
+    _write_batch(spark, stream_dir, rows, 0)
+    src = spark.readStream.schema(SCHEMA).parquet(stream_dir)
+    deduped = dedup_stream(src, "key", "event_time", "10 seconds")
+    out = windowed_count_stream(deduped, "event_time", "30 seconds", "10 seconds")
+    assert len(_event_time_watermarks(out)) == 1
+    q = (
+        out.writeStream.format("memory")
+        .queryName("dedup_wc")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    got = {(r.window_start.second, r.cnt) for r in spark.sql("select * from dedup_wc").collect()}
+    assert got == {(0, 2), (30, 2)}
+
+
+def test_with_watermark_refuses_a_different_delay(spark, stream_dir):
+    from kspp_spark.streaming.core import dedup_stream, with_watermark
+
+    _write_batch(spark, stream_dir, [("a", 1, ts(1))], 0)
+    src = spark.readStream.schema(SCHEMA).parquet(stream_dir)
+    deduped = dedup_stream(src, "key", "event_time", "10 seconds")
+    assert with_watermark(deduped, "event_time", "10000 milliseconds") is deduped
+    with pytest.raises(ValueError, match="10 seconds.*1 minute"):
+        windowed_count_stream(deduped, "event_time", "30 seconds", "1 minute")
+    with pytest.raises(ValueError, match="'event_time'.*'ts2'"):
+        with_watermark(deduped.withColumn("ts2", F.col("event_time")), "ts2", "10 seconds")
 
 
 def test_session_window_stream_merges_and_finalizes(spark, stream_dir):
