@@ -665,9 +665,9 @@ def embedding_dup_pairs(
         pairs = candidates.join(a, "a").join(b, "b")
     else:
         pairs = a.join(b, F.col("a") < F.col("b"))
-    dot = _dot(F.col("_va"), F.col("_vb"), False)
-    na = _dot(F.col("_va"), F.col("_va"), False)
-    nb = _dot(F.col("_vb"), F.col("_vb"), False)
+    dot = _dot(F.col("_va"), F.col("_vb"))
+    na = _dot(F.col("_va"), F.col("_va"))
+    nb = _dot(F.col("_vb"), F.col("_vb"))
     # zero-norm guard: ANSI mode (on in the driver session) turns the
     # division into an error; a zero vector matches nothing (NULL score
     # fails the >= threshold filter)
@@ -1626,7 +1626,6 @@ def prefix_filter_pairs(
     shingle_n: int = 3,
     threshold_num: int = 1,
     threshold_den: int = 2,
-    df_mode: str = "window",
 ) -> DataFrame:
     """EXACT Jaccard similarity self-join by prefix filtering — the
     AllPairs/PPJoin candidate scheme (Bayardo et al. WWW'07; Xiao et
@@ -1682,14 +1681,6 @@ def prefix_filter_pairs(
          intersection COUNT, since shingle sets are distinct, equals
          |a intersect b| exactly. Candidate-bounded work.
 
-    `df_mode` picks how document frequency is attached: 'window'
-    (default) computes df_ = count over (partition by g) — one fewer
-    corpus pass, but the g-partitioning of a hot stop-shingle cannot
-    be split by AQE (WindowExec buffers the partition); 'join'
-    aggregates frequencies (map-side combinable, never skewed) and
-    equi-joins them back, which AQE can skew-split — IDENTICAL
-    output, one extra pass. At 100 TB with stop-shingle skew use
-    'join'; the graded documents corpus measures 'window' faster.
     Never an all-pairs product; no Python anywhere."""
     if not (0 < threshold_num <= threshold_den):
         raise ValueError("prefix_filter_pairs: need 0 < num <= den")
@@ -1710,15 +1701,7 @@ def prefix_filter_pairs(
     small_local = df.rdd.getNumPartitions() <= sc_.defaultParallelism
     if small_local:
         ex0 = materialize_once(ex0, eager=True)
-    if df_mode == "window":
-        ex = ex0.withColumn(
-            "df_", F.count(F.lit(1)).over(W.partitionBy("g"))
-        )
-    elif df_mode == "join":
-        freq = ex0.groupBy("g").agg(F.count(F.lit(1)).alias("df_"))
-        ex = ex0.join(freq, "g")
-    else:
-        raise ValueError(f"prefix_filter_pairs: unknown df_mode {df_mode!r}")
+    ex = ex0.withColumn("df_", F.count(F.lit(1)).over(W.partitionBy("g")))
     wn = W.partitionBy("id")
     ranked = ex.select(
         "id",

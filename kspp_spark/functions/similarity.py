@@ -11,10 +11,6 @@ Two tiers:
   * lsh_ann_topk — approximate: random-hyperplane bucketing via
     spark.ml's BucketedRandomProjectionLSH; candidates come from
     bucket joins so the cross product never forms. The 100 TB path.
-
-`exact_decimal` mode computes the dot products in DECIMAL arithmetic
-(exact, engine-independent) so results can be hash-compared against a
-SQL oracle down to the last bit; the default double path is faster.
 """
 
 from __future__ import annotations
@@ -22,14 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F, Window as W
 
 
-def _dot(a: Column, b: Column, decimal: bool) -> Column:
-    if decimal:
-        prod = F.zip_with(
-            a, b, lambda x, y: x.cast("decimal(18,9)") * y.cast("decimal(18,9)")
-        )
-        return F.aggregate(
-            prod, F.lit(0).cast("decimal(38,18)"), lambda acc, x: acc + x
-        )
+def _dot(a: Column, b: Column) -> Column:
     prod = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
 
@@ -41,19 +30,18 @@ def cosine_scores(
     c_id: str = "vec_id",
     q_vec: str = "embedding",
     c_vec: str = "embedding",
-    exact_decimal: bool = False,
 ) -> DataFrame:
     """All-pairs cosine similarity (query side broadcast)."""
     q = queries.select(
         F.col(q_id).alias("_qid"), F.col(q_vec).alias("_qv")
-    ).withColumn("_qn", _dot(F.col("_qv"), F.col("_qv"), exact_decimal))
+    ).withColumn("_qn", _dot(F.col("_qv"), F.col("_qv")))
     c = corpus.select(
         F.col(c_id).alias("_cid"), F.col(c_vec).alias("_cv")
-    ).withColumn("_cn", _dot(F.col("_cv"), F.col("_cv"), exact_decimal))
+    ).withColumn("_cn", _dot(F.col("_cv"), F.col("_cv")))
     pairs = c.crossJoin(F.broadcast(q))
-    dot = _dot(F.col("_qv"), F.col("_cv"), exact_decimal)
-    # norms are exact (decimal) or deterministic doubles; the final
-    # double math is identical given identical inputs in any engine.
+    dot = _dot(F.col("_qv"), F.col("_cv"))
+    # norms are deterministic sequential doubles; the final double math
+    # is identical given identical inputs in any engine.
     score = dot.cast("double") / F.sqrt(F.col("_qn").cast("double") * F.col("_cn").cast("double"))
     return pairs.select(
         F.col("_qid").alias(q_id),
@@ -71,12 +59,11 @@ def cosine_topk(
     q_vec: str = "embedding",
     c_vec: str = "embedding",
     exclude_self: bool = True,
-    exact_decimal: bool = False,
 ) -> DataFrame:
     """Top-k neighbors per query by cosine; deterministic tiebreak on
     (score desc, corpus id asc). Rank via window — the per-query
     partition is |corpus| rows, pruned to k immediately."""
-    scores = cosine_scores(queries, corpus, q_id, c_id, q_vec, c_vec, exact_decimal)
+    scores = cosine_scores(queries, corpus, q_id, c_id, q_vec, c_vec)
     if exclude_self:
         scores = scores.filter(F.col(q_id) != F.col(c_id))
     w = W.partitionBy(q_id).orderBy(F.col("score").desc(), F.col(c_id))
@@ -150,9 +137,9 @@ def ivf_ann_topk(
     pairs = probed.join(assigned, "_cell")
     if exclude_self:
         pairs = pairs.filter(F.col("_qid") != F.col("_cid"))
-    dot = _dot(F.col("_qv"), F.col("_cv"), False)
-    qn = _dot(F.col("_qv"), F.col("_qv"), False)
-    cn = _dot(F.col("_cv"), F.col("_cv"), False)
+    dot = _dot(F.col("_qv"), F.col("_cv"))
+    qn = _dot(F.col("_qv"), F.col("_qv"))
+    cn = _dot(F.col("_cv"), F.col("_cv"))
     scored = pairs.select(
         "_qid",
         "_cid",
@@ -308,9 +295,9 @@ def srp_ann_topk(
     qv = queries.select(F.col(q_id).alias("_qid"), F.col(q_vec).alias("_qv"))
     cv = corpus.select(F.col(c_id).alias("_cid"), F.col(c_vec).alias("_cv"))
     scored = cand.join(qv, "_qid").join(cv, "_cid")
-    dot = _dot(F.col("_qv"), F.col("_cv"), False)
-    qn = _dot(F.col("_qv"), F.col("_qv"), False)
-    cn = _dot(F.col("_cv"), F.col("_cv"), False)
+    dot = _dot(F.col("_qv"), F.col("_cv"))
+    qn = _dot(F.col("_qv"), F.col("_qv"))
+    cn = _dot(F.col("_cv"), F.col("_cv"))
     score = F.when((qn > 0) & (cn > 0), dot / F.sqrt(qn * cn))
     scored = scored.select(
         F.col("_qid").alias(q_id), F.col("_cid").alias(c_id), score.alias("score")
@@ -589,16 +576,16 @@ def hard_negative_topk(
         F.col(q_id).alias("_qid"),
         F.col(q_vec).alias("_qv"),
         F.col(q_label).alias("_ql"),
-    ).withColumn("_qn", _dot(F.col("_qv"), F.col("_qv"), False))
+    ).withColumn("_qn", _dot(F.col("_qv"), F.col("_qv")))
     c = corpus.select(
         F.col(c_id).alias("_cid"),
         F.col(c_vec).alias("_cv"),
         F.col(c_label).alias("_cl"),
-    ).withColumn("_cn", _dot(F.col("_cv"), F.col("_cv"), False))
+    ).withColumn("_cn", _dot(F.col("_cv"), F.col("_cv")))
     pairs = c.crossJoin(F.broadcast(q)).filter(
         ~F.col("_ql").eqNullSafe(F.col("_cl"))
     )
-    dot = _dot(F.col("_qv"), F.col("_cv"), False)
+    dot = _dot(F.col("_qv"), F.col("_cv"))
     score = dot.cast("double") / F.sqrt(
         F.col("_qn").cast("double") * F.col("_cn").cast("double")
     )

@@ -1704,7 +1704,6 @@ def text_units(
 
 def boilerplate_units(
     df,
-    id_col: str = "doc_id",
     text_col: str = "text",
     split_pattern: str | None = None,
     n_tokens: int = 10,
@@ -1713,6 +1712,12 @@ def boilerplate_units(
 ):
     """Find boilerplate units: units occurring in >= min_docs DISTINCT
     documents. Returns (unit_digest, [unit,] n_docs).
+
+    PRECONDITION: one row per document. n_docs counts rows, so two
+    rows of one document (a duplicated id, or a changelog's older
+    versions) count twice. Reduce a changelog to its live corpus (the
+    last write per id, tombstones dropped) first; the streaming fold
+    (streaming/boilerplate_incremental) does that reduction itself.
 
     Scale shape: in-row array_distinct, explode -> ONE map-side-
     combinable hash aggregation keyed on the 128-bit md5 digest.
@@ -1748,7 +1753,6 @@ def remove_boilerplate(
     min_docs: int = 2,
     max_set_size: int | None = None,
     unit_joiner: str = " ",
-    repartition_to: int | None = None,
 ):
     """Strip boilerplate units from every document, preserving unit
     order. Returns (id, n_units, n_kept, clean_text) — one row per
@@ -1769,7 +1773,7 @@ def remove_boilerplate(
     when nothing is removed.
     """
     bl = boilerplate_units(
-        df, id_col, text_col, split_pattern, n_tokens, min_docs, keep_unit=False
+        df, text_col, split_pattern, n_tokens, min_docs, keep_unit=False
     )
     return remove_boilerplate_with_set(
         df,
@@ -1780,7 +1784,6 @@ def remove_boilerplate(
         n_tokens=n_tokens,
         max_set_size=max_set_size,
         unit_joiner=unit_joiner,
-        repartition_to=repartition_to,
     )
 
 
@@ -1794,7 +1797,6 @@ def remove_boilerplate_with_set(
     n_tokens: int = 10,
     max_set_size: int | None = None,
     unit_joiner: str = " ",
-    repartition_to: int | None = None,
 ):
     """The rewrite half of remove_boilerplate against an EXTERNAL
     boilerplate set (any frame with a md5-unit-digest column, e.g. the
@@ -1821,9 +1823,7 @@ def remove_boilerplate_with_set(
     # partitioning; a small input (few file splits) serializes it on a
     # few cores. Callers with tiny local inputs wrap df in
     # io.rebalance_small_scan first (conditional — a structural no-op
-    # on cluster-sized scans); repartition_to forces a spread here.
-    if repartition_to is not None:
-        df = df.repartition(repartition_to)
+    # on cluster-sized scans).
     return (
         df.withColumn("_units", units)
         .crossJoin(F.broadcast(bl_set))  # 1-row broadcast cross join
@@ -1895,7 +1895,6 @@ def gopher_repetition_counters(
     text_col: str = "text",
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
-    repartition_to: int | None = None,
 ):
     """Gopher repetition counters (Rae et al. 2021 Table A1, the
     repetition half): per document —
@@ -1953,10 +1952,7 @@ def gopher_repetition_counters(
     # per-row work, so a small input (few file splits) serializes the
     # heavy map stage on a few cores. Callers with tiny local inputs
     # wrap df in io.rebalance_small_scan first (conditional — a
-    # structural no-op on cluster-sized scans); repartition_to forces
-    # a spread here.
-    if repartition_to is not None:
-        pre = pre.repartition(repartition_to)
+    # structural no-op on cluster-sized scans).
     toks = F.col("_toks")
 
     def grams(n):

@@ -229,7 +229,7 @@ def write_zordered(
     out.drop("_z").write.format(fmt).mode(mode).save(path)
 
 
-def rebalance_small_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def rebalance_small_scan(df: DataFrame) -> DataFrame:
     """Round-robin rebalance for inputs whose scan yields fewer splits
     than the session's parallelism (a few-MB local parquet file is one
     split — one row group cannot be byte-split by maxPartitionBytes —
@@ -247,8 +247,7 @@ def rebalance_small_scan(df: DataFrame, min_partitions: int | None = None) -> Da
     local queries this wraps, so only apply where the map stage is the
     measured cost center.
     """
-    if min_partitions is None:
-        min_partitions = df.sparkSession.sparkContext.defaultParallelism
+    min_partitions = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < min_partitions:
         return df.repartition(min_partitions)
     return df

@@ -9,16 +9,14 @@ documents are stripped against a continuously-maintained set without
 ever recounting the corpus.
 
 Structurally this IS the inverted-index fold with md5'd text units as
-the "terms" (one unit-frequency state is one postings state), so the
-whole changelog machinery is REUSED from streaming/index_incremental:
-epoch-idempotent partials, per-doc presence sentinels, latest-wins
-merge (arrival- or event-ordered via seq_col), checkpoint-recovery
-replay safety, and compaction. Changelog semantics follow the
-reference's table rules (krecord.h:23-25 tombstones; mem_store.h:64-83
-LWW): a re-crawled document's units supersede its old ones — its old
-units' frequencies DROP — and a tombstone (NULL text) removes the
-document's contribution entirely. A batch recount over the live
-corpus gives the identical set (equivalence-tested).
+the "terms" (one unit-frequency state is one postings state), so it
+reuses streaming/index_incremental's per-batch partials and presence
+sentinels, on the epoch-fold store of streaming/epochs (layout, reset
+guards, last-write-wins merge, compaction, stream wiring). A
+re-crawled document's units supersede its old ones — its old units'
+frequencies DROP — and a tombstone (NULL text) removes the document's
+contribution entirely. A batch recount over the live corpus gives the
+identical set (equivalence-tested).
 
 Scale shape: per trigger only the batch splits into units; only
 (digest, id) pairs persist; the snapshot's doc->winner map is a tiny
@@ -31,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kspp_spark.functions.text import text_units
-from kspp_spark.streaming.epochs import epoch_dirs as _epoch_dirs
+from kspp_spark.streaming.epochs import fold_stream, require_fresh
 from kspp_spark.streaming.index_incremental import (
     _live_rows,
     compact_index_state,
@@ -59,8 +57,8 @@ def boilerplate_partials_batch(
     seq_col: str | None = None,
 ) -> None:
     """foreachBatch body: split ONLY the micro-batch into units and
-    fold (unit_digest, doc_id, occurrences) partials under epoch=<id>
-    with the index fold's changelog semantics (supersede + tombstone +
+    fold (unit_digest, doc_id, occurrences) partials as this trigger's
+    epoch with the index fold's changelog semantics (supersede + tombstone +
     replay idempotency)."""
     index_partials_batch(
         batch_df,
@@ -86,9 +84,10 @@ def boilerplate_stream(
     """Wire a document changelog into the boilerplate-frequency fold.
     Returns the started StreamingQuery; boilerplate_set_snapshot
     serves the current set."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        boilerplate_partials_batch(
+    return fold_stream(
+        stream_df,
+        checkpoint,
+        lambda batch_df, epoch_id: boilerplate_partials_batch(
             batch_df,
             epoch_id,
             state_dir,
@@ -97,13 +96,7 @@ def boilerplate_stream(
             split_pattern=split_pattern,
             n_tokens=n_tokens,
             seq_col=seq_col,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -118,7 +111,10 @@ def boilerplate_set_snapshot(
     LIVE documents — superseded and tombstoned documents no longer
     count (their units' frequencies dropped when their newer version
     won the merge). Matches functions/text.boilerplate_units(
-    keep_unit=False) over the live corpus exactly."""
+    keep_unit=False) over the live corpus exactly: the live corpus
+    holds one row per doc_id (the last write per id, tombstones
+    dropped), which is boilerplate_units' one-row-per-document
+    precondition."""
     live = _live_rows(spark, state_dir, id_col)
     return (
         live.groupBy(F.col("term").alias("unit_digest"))
@@ -136,18 +132,13 @@ def boilerplate_bootstrap(
     n_tokens: int = 10,
     seq_col: str | None = None,
 ) -> None:
-    """Bootstrap the fold from an EXISTING corpus (the epoch=-1
-    convention shared with the index/scd2/rollup bootstraps): one
-    batch unit pass lands as the epoch=-1 partial; a fresh stream's
+    """Bootstrap the fold from an EXISTING corpus: one batch unit
+    pass lands as the epoch=-1 partial; a fresh stream's
     epochs accumulate on top, and streamed doc_ids may update or
     tombstone bootstrapped ones across the boundary. Refuses
     non-fresh directories. Keep seq mode consistent between bootstrap
     and stream (synthesize F.lit(0) when the corpus has none)."""
-    if _epoch_dirs(corpus_df.sparkSession, state_dir):
-        raise ValueError(
-            "boilerplate_bootstrap: state_dir already contains epochs — "
-            "bootstrap only initializes fresh directories"
-        )
+    require_fresh(corpus_df.sparkSession, "boilerplate_bootstrap", state_dir=state_dir)
     boilerplate_partials_batch(
         corpus_df,
         -1,

@@ -11,19 +11,14 @@ Batch dedup over the full corpus is functions/dedup.py
 (minhash_signatures + minhash_candidates); this module reuses the same
 signature/banding code so streaming and batch agree exactly.
 
-CHANGELOG SEMANTICS (same rules as the index folds, krecord.h:23-25 /
-mem_store.h:64-83): a re-emitted id SUPERSEDES its older signatures
-and a tombstone (NULL text/vector -> no signature rows) deletes the
-doc from the probe-able state. Without `seq_col` the winner per doc is
-the newest EPOCH (arrival order); with `seq_col` the winner is
-max (seq, epoch) — EVENT-ordered last-write-wins, so a late-arriving
-STALE update or delete (lower seq in a later epoch) is IGNORED: the
-doc keeps serving its fresher state content, the stale batch content
-generates no pairs, and the stale rows lose every future winner merge
-(the reference's stale-update/stale-delete rule). Migration from a
-seq-less state is defined exactly as in index_incremental: legacy
-rows surface with NULL _seq via mergeSchema and rank below every real
-seq.
+CHANGELOG SEMANTICS: the state is an epoch-fold store
+(streaming/epochs: layout, reset guards, last-write-wins merge,
+compaction, stream wiring). A re-emitted id SUPERSEDES its older
+signatures and a tombstone (NULL text/vector -> no signature rows)
+deletes the doc from the probe-able state. With `seq_col` a
+late-arriving STALE update or delete is IGNORED: the doc keeps serving
+its fresher state content, the stale batch content generates no pairs,
+and the stale rows lose every future winner merge.
 
 Scale notes: state holds (id, band, band_hash[, _seq]) — fixed width,
 ~bands rows per document, far smaller than text. The per-batch probe
@@ -32,10 +27,7 @@ small, shuffle otherwise (Spark's planner picks). At very large
 corpus sizes, persist the state bucketed by band_hash
 (io.write_bucketed) so the probe join is shuffle-free on the state
 side. No driver-side state anywhere; recovery is Spark checkpointing
-— the state appends are idempotent per epoch via overwrite-by-epoch
-directory naming, and `guard_epoch_monotonic` refuses a fresh
-checkpoint pointed at a retained state directory (which would
-silently mix stale epochs into every winner merge).
+over the store's replay-idempotent epochs.
 
 Reference: no kspp equivalent (beyond-reference north-star operator);
 the changelog rules mirror krecord.h:23-25 / mem_store.h:64-83.
@@ -43,14 +35,17 @@ the changelog rules mirror krecord.h:23-25 / mem_store.h:64-83.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 from kspp_spark.functions.dedup import minhash_signatures, srp_signatures
 from kspp_spark.streaming.epochs import (
-    epoch_dirs as _epoch_dirs,
-    guard_epoch_monotonic as _guard_epoch_monotonic,
+    compact,
+    fold_stream,
+    guard_epoch_monotonic,
+    read_state,
+    winner_rows,
+    winner_versions,
+    write_epoch,
 )
 
 
@@ -150,70 +145,6 @@ def banded_signatures(
     return banded.select("id", "bb.band", "bb.bhash")
 
 
-def _read_state(spark, path: str) -> DataFrame | None:
-    """The accumulated epoch-partitioned state, or None when the path
-    does not exist yet (first epoch). mergeSchema so a state that
-    started seq-less surfaces NULL _seq on its legacy epochs (the
-    defined migration, module docstring). ONLY a missing/empty path
-    means "first epoch"; any other failure (transient S3/HDFS error,
-    permissions, corrupt footer) re-raises — swallowing it would
-    silently drop all accumulated LSH state and miss every
-    cross-batch duplicate for this micro-batch."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.option("mergeSchema", "true").parquet(path)
-    except AnalysisException as e:
-        msg = str(e)
-        if any(
-            tag in msg
-            for tag in (
-                "PATH_NOT_FOUND",
-                "Path does not exist",
-                "UNABLE_TO_INFER_SCHEMA",
-                "Unable to infer schema",
-            )
-        ):
-            return None
-        raise
-
-
-def _winner_versions(state: DataFrame) -> DataFrame:
-    """Per-id winning version of an epoch-partitioned dedup state:
-    (_lid, _wseq, _wepoch). With a _seq column the winner is
-    max (seq, epoch) — struct max ranks NULL _seq (legacy seq-less
-    epochs) below every real seq; without, newest epoch (arrival
-    order). _wseq is NULL in arrival mode."""
-    if "_seq" in state.columns:
-        return state.groupBy(F.col("id").alias("_lid")).agg(
-            F.max(F.struct("_seq", "epoch")).alias("_w")
-        ).select(
-            "_lid",
-            F.col("_w._seq").alias("_wseq"),
-            F.col("_w.epoch").alias("_wepoch"),
-        )
-    return state.groupBy(F.col("id").alias("_lid")).agg(
-        F.max("epoch").alias("_wepoch")
-    ).select("_lid", F.lit(None).cast("long").alias("_wseq"), "_wepoch")
-
-
-def _winner_rows(state: DataFrame) -> DataFrame:
-    """The winning version's rows per id (sentinels/NULL rows
-    included), epoch dropped, _seq retained when present."""
-    versions = _winner_versions(state)
-    if "_seq" in state.columns:
-        cond = (
-            (F.col("id") == F.col("_lid"))
-            & F.col("_seq").eqNullSafe(F.col("_wseq"))
-            & (F.col("epoch") == F.col("_wepoch"))
-        )
-    else:
-        cond = (F.col("id") == F.col("_lid")) & (
-            F.col("epoch") == F.col("_wepoch")
-        )
-    return state.join(versions, cond).drop("_lid", "_wseq", "_wepoch", "epoch")
-
-
 def probe_and_update(
     batch_df: DataFrame,
     epoch_id: int,
@@ -241,23 +172,19 @@ def probe_and_update(
     (banded_signatures); pass srp_banded_signatures for embedding
     streams. The probe/update machinery is family-agnostic.
 
-    CHANGELOG SEMANTICS (krecord.h:23-25 / mem_store.h:64-83): a
+    CHANGELOG SEMANTICS (the store's merge rule, streaming/epochs): a
     re-emitted id SUPERSEDES its older signatures — the probe only
     matches each doc's winning version's bands — and a tombstone
     (NULL text/vector, which produces no signature rows) deletes the
     doc from the probe-able state. Every epoch writes one band=-1
     presence SENTINEL per touched id to register updates/deletes.
     Without `seq_col`, ids must be unique within a batch (the
-    compacted-changelog shape) and the winner is the newest epoch
-    (ARRIVAL order). With `seq_col` (non-NULL event sequence /
-    event-time column on the batch): within-batch collisions resolve
-    max_by(seq), the winner across epochs is max (seq, epoch), and a
-    late-arriving STALE update or delete — lower seq than the doc's
-    state — is IGNORED: it pairs with nothing, supersedes nothing,
-    and loses every future merge, exactly the reference's
-    stale-update/stale-delete rule. Use one seq mode consistently
-    across the stream's life (compaction preserves winning seqs;
-    seq-less legacy epochs rank below every real seq).
+    compacted-changelog shape). With `seq_col` (non-NULL event
+    sequence / event-time column on the batch), within-batch
+    collisions resolve max_by(seq), and a STALE update or delete —
+    lower seq than the doc's state — pairs with nothing and
+    supersedes nothing. Use one seq mode consistently across the
+    stream's life.
 
     VERIFY STAGE (`verify=True`): raw band collisions become scored
     pairs (new_id, dup_of, score, verified). A per-doc signature
@@ -286,12 +213,10 @@ def probe_and_update(
     member has band rows but no signature row are dropped by the
     verify join.
 
-    Epoch-named state files make replays after a checkpoint recovery
-    overwrite rather than double-append (idempotent at-least-once);
-    guard_epoch_monotonic refuses a reset checkpoint over retained
-    state (stale epochs would silently win every merge)."""
+    The band, sigs and pairs areas are epochs of the store
+    (streaming/epochs): replay-idempotent and reset-guarded."""
     spark = batch_df.sparkSession
-    _guard_epoch_monotonic(spark, state_dir, epoch_id, "probe_and_update")
+    guard_epoch_monotonic(spark, epoch_id, "probe_and_update", state_dir)
     if seq_col is not None:
         payload = [c for c in batch_df.columns if c not in (id_col, seq_col)]
         batch = (
@@ -339,7 +264,7 @@ def probe_and_update(
         *seq_cols,
     ).distinct()
 
-    state = _read_state(spark, state_dir)
+    state = read_state(spark, state_dir, missing_ok=True)
     stale_ids = None  # batch ids whose write is STALE vs the state
     probe_state = None
     if state is not None and "epoch" in state.columns:
@@ -348,7 +273,7 @@ def probe_and_update(
         # replay (which already wrote this epoch's state) doesn't emit
         # the within-batch pairs a second time in (a,b)+(b,a) form.
         state = state.filter(F.col("epoch") != F.lit(int(epoch_id)))
-        versions = _winner_versions(state)
+        versions = winner_versions(state, "id")
         if seq_col is not None and "_seq" in state.columns:
             # event-ordered LWW: the batch write LOSES for ids whose
             # state winner carries a strictly greater seq (NULL legacy
@@ -365,7 +290,7 @@ def probe_and_update(
         # docs (whose winner holds only the band=-1 sentinel) stop
         # matching. The versions map is a tiny aggregate relative to
         # the band state.
-        probe_state = _winner_rows(state).filter(F.col("band") >= 0)
+        probe_state = winner_rows(state, "id").filter(F.col("band") >= 0)
         # docs SUPERSEDED by this batch: their state rows stop being
         # probe-able as of this trigger (the within-batch pass covers
         # their new content). In seq mode, stale batch writes supersede
@@ -410,12 +335,8 @@ def probe_and_update(
             shingle_n=shingle_n, seq_col=seq_col, sig_fn=sig_fn,
             score_fn=score_fn, min_score=min_score, stale_ids=stale_ids,
         )
-    pairs.write.mode("overwrite").parquet(
-        os.path.join(pairs_dir, f"epoch={int(epoch_id)}")
-    )
-    new.unionByName(sentinels).write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={int(epoch_id)}")
-    )
+    write_epoch(pairs, pairs_dir, epoch_id)
+    write_epoch(new.unionByName(sentinels), state_dir, epoch_id)
     new.unpersist()
     if batch_sigs is not None:
         batch_sigs.unpersist()
@@ -465,14 +386,14 @@ def _verify_pairs(
     # the batch does NOT supersede + the batch's own non-stale sigs
     # (read BEFORE writing this epoch; exclude it for replay safety)
     lookups = []
-    state_sigs = _read_state(spark, sigs_dir)
+    state_sigs = read_state(spark, sigs_dir, missing_ok=True)
     if state_sigs is not None and "epoch" in state_sigs.columns:
         state_sigs = state_sigs.filter(F.col("epoch") != F.lit(int(epoch_id)))
         superseding = batch_sigs.select("id")
         if stale_ids is not None:
             superseding = superseding.join(stale_ids, "id", "left_anti")
         lookups.append(
-            _winner_rows(state_sigs)
+            winner_rows(state_sigs, "id")
             .join(superseding, "id", "left_anti")
             .select("id", "sig")
         )
@@ -501,9 +422,7 @@ def _verify_pairs(
         )
         .withColumn("verified", F.col("score") >= F.lit(min_score))
     )
-    batch_sigs.write.mode("overwrite").parquet(
-        os.path.join(sigs_dir, f"epoch={int(epoch_id)}")
-    )
+    write_epoch(batch_sigs, sigs_dir, epoch_id)
     return scored, batch_sigs
 
 
@@ -513,11 +432,11 @@ def dedup_sigs_snapshot(spark, sigs_dir: str) -> DataFrame:
     probe. Tombstoned docs (winning row has NULL sig) drop out. Use
     to re-score historical pairs against current content, or to seed
     a batch candidate run that must agree with the stream."""
-    state = _read_state(spark, sigs_dir)
+    state = read_state(spark, sigs_dir, missing_ok=True)
     if state is None:
         raise ValueError(f"dedup_sigs_snapshot: no state at {sigs_dir}")
     return (
-        _winner_rows(state)
+        winner_rows(state, "id")
         .filter(F.col("sig").isNotNull())
         .select("id", "sig")
     )
@@ -532,19 +451,14 @@ def incremental_near_dedup(
 ):
     """Wire a document stream into the probe-and-update loop. Returns
     the started StreamingQuery; near-dup pairs accumulate under
-    pairs_dir/epoch=*/ as (new_id, dup_of) — plus (score, verified)
+    pairs_dir's epochs as (new_id, dup_of) — plus (score, verified)
     when verify=True rides through to probe_and_update."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        probe_and_update(
+    return fold_stream(
+        stream_df,
+        checkpoint,
+        lambda batch_df, epoch_id: probe_and_update(
             batch_df, epoch_id, state_dir=state_dir, pairs_dir=pairs_dir, **kwargs
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -555,34 +469,16 @@ def compact_dedup_state(
     sigs_dir: str | None = None,
     sigs_out_dir: str | None = None,
 ) -> None:
-    """Rewrite the accumulated band state as a single epoch=-1 in a
-    FRESH out_dir, keeping only each id's winning rows — superseded
+    """Rewrite the accumulated band state as a single epoch=-1 of its
+    winners in a FRESH out_dir (streaming/epochs.compact) — superseded
     bands physically disappear, so per-trigger probe cost tracks the
-    live corpus instead of total update history. Winners are
-    seq-aware (max (seq, epoch) when the fold ran with seq_col) and
-    KEEP their sentinel rows and seqs: a tombstoned doc's surviving
-    row is its band=-1 sentinel carrying the delete's seq, which is
-    what makes a late stale update lose the merge after compaction
-    (same policy as the index fold's compaction). Pass the verify
+    live corpus instead of total update history. Pass the verify
     stage's sigs_dir/sigs_out_dir to compact the signature state in
-    lock-step (its NULL-sig tombstone rows are kept for the same
-    reason). Point the stream at the new dirs with a fresh checkpoint
-    afterwards."""
-    # Validate EVERYTHING before writing anything: a mid-loop raise
-    # after the band state was already compacted would leave a
-    # half-written out_dir that then fails the corrected retry's
-    # fresh-directory check.
-    targets = [(state_dir, out_dir, "out_dir")] + (
-        [(sigs_dir, sigs_out_dir, "sigs_out_dir")] if sigs_dir is not None else []
-    )
-    for _, out, label in targets:
-        if out is None:
-            raise ValueError("compact_dedup_state: sigs_dir needs sigs_out_dir")
-        if _epoch_dirs(spark, out):
-            raise ValueError(
-                f"compact_dedup_state: {label} already contains epochs — "
-                "compaction writes a fresh directory"
-            )
-    for src, out, _ in targets:
-        winners = _winner_rows(spark.read.option("mergeSchema", "true").parquet(src))
-        winners.write.mode("overwrite").parquet(os.path.join(out, "epoch=-1"))
+    lock-step (its NULL-sig tombstone rows are kept like the band
+    sentinels)."""
+    if sigs_dir is not None and sigs_out_dir is None:
+        raise ValueError("compact_dedup_state: sigs_dir needs sigs_out_dir")
+    targets = {"out_dir": (state_dir, out_dir)}
+    if sigs_dir is not None:
+        targets["sigs_out_dir"] = (sigs_dir, sigs_out_dir)
+    compact(spark, "compact_dedup_state", "id", targets)

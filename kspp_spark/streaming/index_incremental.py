@@ -1,38 +1,27 @@
 """Incremental inverted-index maintenance for document CHANGELOGS.
 
-The streaming face of functions/text.inverted_index, on the same
-epoch-idempotent fold convention as streaming/rollup and
-streaming/scd2: each micro-batch writes its own (term, doc_id, tf)
-partial postings under epoch=<id> (overwrite => checkpoint-recovery
-replays are safe); the queryable index materializes on read by
-merging partials — so per-trigger work is O(batch), never a
-re-tokenization of the accumulated corpus.
+The streaming face of functions/text.inverted_index: each micro-batch
+writes its own (term, doc_id, tf) partial postings as one epoch of the
+epoch-fold store (streaming/epochs: layout, reset guards, last-write-
+wins merge, compaction, stream wiring); the queryable index
+materializes on read by merging partials — so per-trigger work is
+O(batch), never a re-tokenization of the accumulated corpus.
 
-CHANGELOG SEMANTICS (krecord.h:23-25 — NULL value = tombstone;
-mem_store.h:64-83 — last write wins per key): a re-emitted doc_id
-SUPERSEDES its older postings, and a tombstone (NULL text) REMOVES
-them. The mechanism is latest-epoch-wins per doc_id:
-
-- every epoch writes, besides its postings, one SENTINEL row
-  (term NULL, tf 0) per doc_id the batch touched — so tombstoned and
-  empty documents still register their presence in that epoch;
-- the snapshot keeps only each doc's newest epoch's rows (a per-doc
-  max-epoch map — (doc_id, int) pairs, orders of magnitude smaller
-  than the postings — joined back on doc_id), then drops sentinels.
-  A deleted doc's newest epoch holds only its sentinel => no
-  postings survive; an updated doc's older postings lose the
-  max-epoch comparison. df counts and posting lists are computed
-  AFTER superseding, so they never count ghosts.
+CHANGELOG SEMANTICS: a re-emitted doc_id SUPERSEDES its older
+postings, and a tombstone (NULL text) REMOVES them. Every epoch
+writes, besides its postings, one SENTINEL row (term NULL, tf 0) per
+doc_id the batch touched, so tombstoned and empty documents still
+register their presence; the snapshot keeps only each doc's winning
+version's rows, then drops sentinels. A deleted doc's winner holds
+only its sentinel => no postings survive. df counts and posting lists
+are computed AFTER superseding, so they never count ghosts.
 
 A doc_id must appear at most once per micro-batch (the standard
 compacted-changelog shape); pass `seq_col` to let the fold resolve
 within-batch collisions last-write-wins by that column instead — AND
-to make the cross-epoch merge EVENT-ordered: with seq_col, the
-winning version per doc is max (seq, epoch), so a late-arriving
-STALE update or delete (lower seq in a later epoch) is ignored —
-the reference's stale-update/stale-delete rule (mem_store.h:64-83).
-Use one seq mode consistently across bootstrap, stream, and
-compaction (compaction preserves winning seqs).
+to make the cross-epoch merge EVENT-ordered, so a late-arriving STALE
+update or delete is ignored. Use one seq mode consistently across
+bootstrap, stream, and compaction (compaction preserves winning seqs).
 
 Scale shape: per trigger, only the batch tokenizes; on read, only
 integer/term triples shuffle (text never does), and the doc->epoch
@@ -48,14 +37,17 @@ delete/update propagation matching the reference's table semantics.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 from kspp_spark.functions.text import per_doc_term_stats, tokenize
 from kspp_spark.streaming.epochs import (
-    epoch_dirs as _epoch_dirs,
-    guard_epoch_monotonic as _guard_epoch_monotonic,
+    compact,
+    fold_stream,
+    guard_epoch_monotonic,
+    read_state,
+    require_fresh,
+    winner_rows,
+    write_epoch,
 )
 
 
@@ -86,7 +78,7 @@ def index_partials_batch(
     unitize=None,
 ) -> None:
     """foreachBatch body: tokenize ONLY the micro-batch and write its
-    (term, doc_id, tf) partial postings under epoch=<id>, plus one
+    (term, doc_id, tf) partial postings as this trigger's epoch, plus one
     NULL-term sentinel per touched doc_id (the changelog presence
     marker — see module docstring).
 
@@ -94,8 +86,8 @@ def index_partials_batch(
     tokenize) generalizes what a "term" is: the boilerplate fold
     (streaming/boilerplate_incremental) passes md5'd text units, so
     the same changelog machinery maintains a unit-frequency state."""
-    _guard_epoch_monotonic(
-        batch_df.sparkSession, state_dir, epoch_id, "index_partials_batch"
+    guard_epoch_monotonic(
+        batch_df.sparkSession, epoch_id, "index_partials_batch", state_dir
     )
     batch = _lww_batch(batch_df, id_col, text_col, seq_col)
     seq_cols = [F.col("_seq")] if seq_col else []
@@ -116,9 +108,7 @@ def index_partials_batch(
         F.lit(0).cast("long").alias("tf"),
         *seq_cols,
     )
-    partial.unionByName(sentinels).write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={int(epoch_id)}")
-    )
+    write_epoch(partial.unionByName(sentinels), state_dir, epoch_id)
 
 
 def index_stream(
@@ -132,72 +122,23 @@ def index_stream(
     """Wire a document changelog into the index fold. Returns the
     started StreamingQuery; `index_snapshot` serves the current
     index."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        index_partials_batch(
+    return fold_stream(
+        stream_df,
+        checkpoint,
+        lambda batch_df, epoch_id: index_partials_batch(
             batch_df, epoch_id, state_dir, id_col=id_col, text_col=text_col,
             seq_col=seq_col,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _winning_rows(
-    spark, state_dir: str, id_col: str, keep_seq: bool = False
-) -> DataFrame:
-    """The winning version's rows per doc (SENTINELS INCLUDED) from
-    the accumulated partials. The doc->winner map is a tiny (id,
-    version) aggregate — orders of magnitude smaller than the
-    postings — joined back on the id (AQE broadcasts the map side at
-    moderate scale).
-
-    Without a _seq column the winner is the newest epoch (arrival
-    order). With _seq (the fold ran with seq_col) the winner is max
-    (seq, epoch) — EVENT-ordered LWW (mem_store.h:64-83): a
-    late-arriving STALE update or delete loses the merge. Rows with
-    NULL _seq (epochs folded before seq_col was adopted, surfaced via
-    mergeSchema) rank BELOW every real seq — struct-max NULLS FIRST
-    plus a null-safe join — so migrating a seq-less state to seq mode
-    is well-defined: every seq-ed write supersedes the legacy rows,
-    and seq-less-only docs keep serving by epoch order."""
-    partials = spark.read.option("mergeSchema", "true").parquet(state_dir)
-    if "_seq" in partials.columns:
-        latest = partials.groupBy(F.col(id_col).alias("_lid")).agg(
-            F.max(F.struct("_seq", "epoch")).alias("_w")
-        )
-        return (
-            partials.join(
-                latest,
-                (F.col(id_col) == F.col("_lid"))
-                & F.col("_seq").eqNullSafe(F.col("_w._seq"))
-                & (F.col("epoch") == F.col("_w.epoch")),
-            )
-            .drop("_lid", "_w", "epoch", *([] if keep_seq else ["_seq"]))
-        )
-    latest = partials.groupBy(F.col(id_col).alias("_lid")).agg(
-        F.max("epoch").alias("_e")
-    )
-    return (
-        partials.join(
-            latest,
-            (F.col(id_col) == F.col("_lid")) & (F.col("epoch") == F.col("_e")),
-        )
-        .drop("_lid", "_e", "epoch")
+        ),
     )
 
 
 def _live_rows(spark, state_dir: str, id_col: str) -> DataFrame:
-    """Winning postings only: the merge of _winning_rows minus the
+    """Winning postings only: the store's winner merge minus the
     NULL-term presence sentinels (a deleted doc's winner is its
     sentinel alone, so nothing of it survives here)."""
-    return _winning_rows(spark, state_dir, id_col).filter(
-        F.col("term").isNotNull()
-    )
+    return winner_rows(
+        read_state(spark, state_dir), id_col, keep_seq=False
+    ).filter(F.col("term").isNotNull())
 
 
 def index_snapshot(
@@ -211,7 +152,7 @@ def index_snapshot(
     schema and vocabulary bounds as the batch inverted_index:
     (term, df, n_occ, postings). Superseded and tombstoned documents
     are invisible: df/n_occ/postings are computed after the
-    latest-epoch-wins merge."""
+    winner merge."""
     live = _live_rows(spark, state_dir, id_col)
     agg = live.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"),
@@ -242,19 +183,16 @@ def positional_partials_batch(
 ) -> None:
     """foreachBatch body for the POSITIONAL index: tokenize only the
     micro-batch and write its (term, doc_id, tf, positions) partial
-    postings under epoch=<id> — the streaming producer of the
+    postings as this trigger's epoch — the streaming producer of the
     positional_index artifact phrase_search_indexed / bm25_indexed
     consume — plus the NULL-term sentinel per touched doc (changelog
     presence marker). With `doclen_dir`, the per-doc token lengths
     fold too (BM25's side table): every touched doc writes its length
-    each epoch (0 for tombstones), and the snapshot takes the newest.
-    Same epoch-overwrite idempotency as the tf-only fold."""
-    spark = batch_df.sparkSession
-    _guard_epoch_monotonic(spark, state_dir, epoch_id, "positional_partials_batch")
-    if doclen_dir is not None:
-        _guard_epoch_monotonic(
-            spark, doclen_dir, epoch_id, "positional_partials_batch(doclen)"
-        )
+    each epoch (0 for tombstones), and the snapshot takes the winner."""
+    guard_epoch_monotonic(
+        batch_df.sparkSession, epoch_id, "positional_partials_batch",
+        state_dir, doclen_dir,
+    )
     batch = _lww_batch(batch_df, id_col, text_col, seq_col)
     seq_cols = [F.col("_seq")] if seq_col else []
     # MAP-ONLY per-doc (tf, positions) — same r13-opt rationale as
@@ -271,13 +209,11 @@ def positional_partials_batch(
         F.array().cast("array<int>").alias("positions"),
         *seq_cols,
     )
-    partial.unionByName(sentinels).write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={int(epoch_id)}")
-    )
+    write_epoch(partial.unionByName(sentinels), state_dir, epoch_id)
     if doclen_dir is not None:
         # directly (not via text.doc_lengths, which drops dl=0 rows):
         # tombstoned/empty docs must register a 0 length so their
-        # stale lengths lose the latest-epoch-wins merge
+        # stale lengths lose the winner merge
         lengths = batch.select(
             F.col(id_col),
             F.coalesce(
@@ -285,9 +221,7 @@ def positional_partials_batch(
             ).cast("long").alias("dl"),
             *seq_cols,
         )
-        lengths.write.mode("overwrite").parquet(
-            os.path.join(doclen_dir, f"epoch={int(epoch_id)}")
-        )
+        write_epoch(lengths, doclen_dir, epoch_id)
 
 
 def doc_lengths_snapshot(
@@ -295,20 +229,18 @@ def doc_lengths_snapshot(
 ) -> DataFrame:
     """Current doc-length table from the accumulated per-epoch folds —
     the streaming-maintained form of functions/text.doc_lengths, fed
-    straight into bm25_indexed. Latest-epoch-wins per doc; dl=0 rows
+    straight into bm25_indexed. The winning version per doc; dl=0 rows
     (tombstoned/empty docs) drop out, matching the batch operator's
     dl > 0 contract. `id_col` must match the fold's (explicit, like
     every sibling snapshot — never inferred from physical column
     order, which schema merges could reshuffle)."""
-    # partials write (id_col, dl[, _seq]) + epoch; same winner rule as
-    # the postings merge (shared _winning_rows)
-    cols = spark.read.parquet(doclen_dir).columns
-    if id_col not in cols:
+    state = read_state(spark, doclen_dir)
+    if id_col not in state.columns:
         raise ValueError(
             f"doc_lengths_snapshot: id_col {id_col!r} not in doclen "
-            f"state columns {cols} — pass the id_col the fold ran with"
+            f"state columns {state.columns} — pass the id_col the fold ran with"
         )
-    return _winning_rows(spark, doclen_dir, id_col).filter(F.col("dl") > 0)
+    return winner_rows(state, id_col, keep_seq=False).filter(F.col("dl") > 0)
 
 
 def positional_index_stream(
@@ -324,18 +256,13 @@ def positional_index_stream(
     Returns the started StreamingQuery; `positional_index_snapshot`
     (and `doc_lengths_snapshot` when doclen_dir is set) serve the
     current artifacts."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        positional_partials_batch(
+    return fold_stream(
+        stream_df,
+        checkpoint,
+        lambda batch_df, epoch_id: positional_partials_batch(
             batch_df, epoch_id, state_dir, id_col=id_col, text_col=text_col,
             doclen_dir=doclen_dir, seq_col=seq_col,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -350,7 +277,7 @@ def positional_index_snapshot(
     exact schema of the batch functions/text.positional_index
     ((term, doc_id, tf, df, positions)), so the indexed query
     operators run unchanged against a streaming-maintained index.
-    The latest-epoch-wins merge supersedes updated docs and erases
+    The winner merge supersedes updated docs and erases
     tombstoned ones BEFORE df counts, so the served index equals a
     fresh batch index over the corpus's current logical state. The
     merge joins only the tiny doc->epoch map; the df side broadcasts
@@ -375,9 +302,8 @@ def index_bootstrap(
     doclen_dir: str | None = None,
     seq_col: str | None = None,
 ) -> None:
-    """Bootstrap the incremental index from an EXISTING corpus (same
-    epoch=-1 convention as the scd2/rollup bootstraps): one batch
-    tokenize pass lands as the epoch=-1 partial; a fresh stream's
+    """Bootstrap the incremental index from an EXISTING corpus: one
+    batch tokenize pass lands as the epoch=-1 partial; a fresh stream's
     epochs then accumulate on top through the normal merge-on-read
     snapshot. positional=True writes the positional partials (and the
     doc-length fold when doclen_dir is set). Refuses non-fresh
@@ -390,15 +316,10 @@ def index_bootstrap(
     seq_col, bootstrap with one too (a seq column is synthesizable as
     F.lit(0) when the corpus has none — every real stream seq then
     supersedes it)."""
-    spark = corpus_df.sparkSession
-    for d, label in [(state_dir, "state_dir")] + (
-        [(doclen_dir, "doclen_dir")] if doclen_dir is not None else []
-    ):
-        if _epoch_dirs(spark, d):
-            raise ValueError(
-                f"index_bootstrap: {label} already contains epochs — "
-                "bootstrap only initializes fresh directories"
-            )
+    require_fresh(
+        corpus_df.sparkSession, "index_bootstrap",
+        state_dir=state_dir, doclen_dir=doclen_dir,
+    )
     if positional:
         positional_partials_batch(
             corpus_df, -1, state_dir, id_col=id_col, text_col=text_col,
@@ -418,25 +339,11 @@ def compact_index_state(
     id_col: str = "doc_id",
     positional: bool = True,
 ) -> None:
-    """Rewrite an accumulated fold as a single epoch=-1 partial in a
-    FRESH out_dir: the winning-version merge runs once at compaction
-    instead of on every snapshot read, and superseded postings
-    physically disappear. The winners' SENTINEL rows are kept — in
-    seq mode a tombstoned doc's only surviving row is its sentinel
-    carrying the delete's seq, and dropping it would let a late STALE
-    update resurrect the deleted doc (the sentinel is what makes the
-    stale write lose the merge). Point the stream at out_dir with a
-    fresh checkpoint afterwards (the epoch guard enforces the
-    fresh-dir discipline)."""
-    if _epoch_dirs(spark, out_dir):
-        raise ValueError(
-            "compact_index_state: out_dir already contains epochs — "
-            "compaction writes a fresh directory"
-        )
-    winners = _winning_rows(spark, state_dir, id_col, keep_seq=True)
-    cols = ["term", id_col, "tf"] + (["positions"] if positional else [])
-    if "_seq" in winners.columns:
-        cols.append("_seq")
-    winners.select(*cols).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "epoch=-1")
+    """Rewrite an accumulated fold as a single epoch=-1 partial of its
+    winners in a FRESH out_dir (streaming/epochs.compact): the merge
+    runs once here instead of on every snapshot read, and superseded
+    postings physically disappear. positional=False keeps tf only."""
+    compact(
+        spark, "compact_index_state", id_col, {"out_dir": (state_dir, out_dir)},
+        cols=["term", id_col, "tf"] + (["positions"] if positional else []),
     )

@@ -11,9 +11,8 @@ Spark primitives:
 - per-batch work is O(batch), never a rescan of history;
 - state is pre-aggregated partials — orders of magnitude smaller than
   the raw stream;
-- epoch-named partial files make checkpoint-recovery replays overwrite
-  rather than double-append (idempotent at-least-once), the same
-  convention as streaming/dedup_incremental;
+- partials live in the epoch-fold store (streaming/epochs), so
+  checkpoint-recovery replays overwrite rather than double-append;
 - the snapshot is algebraically exact: decomposable measures
   (count/sum/min/max) merge associatively, so partials from any batch
   split produce the identical rollup (verified against the batch
@@ -26,11 +25,15 @@ beyond-reference north-star operator.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 from kspp_spark.operators.aggregates import rollup_agg_exprs
+from kspp_spark.streaming.epochs import (
+    fold_stream,
+    guard_epoch_monotonic,
+    require_fresh,
+    write_epoch,
+)
 
 
 def rollup_partials_batch(
@@ -43,25 +46,16 @@ def rollup_partials_batch(
     grain: str = "hour",
 ) -> None:
     """foreachBatch body: aggregate the micro-batch to finest-grain
-    partials and write them under epoch=<id> (overwrite => replay-
-    idempotent). Refuses to fold when state_dir already holds epochs
-    NEWER than this trigger — a reset checkpoint against retained
-    state would overwrite epoch=0 while older epochs survive, mixing
-    stale and new partials into every snapshot (same loud refusal as
-    scd2_fold_batch; a replay of the CURRENT epoch overwrites its own
-    directory and stays fine)."""
-    from kspp_spark.streaming.epochs import guard_epoch_monotonic
-
+    partials and write them as this trigger's epoch (reset-guarded,
+    replay-idempotent)."""
     guard_epoch_monotonic(
-        batch_df.sparkSession, state_dir, epoch_id, "rollup_partials_batch"
+        batch_df.sparkSession, epoch_id, "rollup_partials_batch", state_dir
     )
     first_aggs, _ = rollup_agg_exprs(measures)
     partials = batch_df.groupBy(
         F.date_trunc(grain, F.col(event_time)).alias("window_start"), *keys
     ).agg(*first_aggs)
-    partials.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={int(epoch_id)}")
-    )
+    write_epoch(partials, state_dir, epoch_id)
 
 
 def rollup_stream(
@@ -74,20 +68,15 @@ def rollup_stream(
     grain: str = "hour",
 ):
     """Wire a stream into the continuous-rollup loop. Returns the
-    started StreamingQuery; finest-grain partials accumulate under
-    state_dir/epoch=*/ and `rollup_snapshot` serves the current
-    multi-grain rollup."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        rollup_partials_batch(
+    started StreamingQuery; finest-grain partials accumulate in
+    state_dir and `rollup_snapshot` serves the current multi-grain
+    rollup."""
+    return fold_stream(
+        stream_df,
+        checkpoint,
+        lambda batch_df, epoch_id: rollup_partials_batch(
             batch_df, epoch_id, state_dir, event_time, keys, measures, grain
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -129,25 +118,13 @@ def rollup_bootstrap(
     grain: str = "hour",
 ) -> None:
     """Bootstrap the continuous rollup from HISTORICAL data (the
-    warehouse-to-stream migration move, same epoch=-1 convention as
-    streaming/scd2.scd2_bootstrap): one finest-grain aggregation over
+    warehouse-to-stream migration move): one finest-grain aggregation over
     the history lands as the epoch=-1 partial; a fresh stream's
     epochs (0, 1, ...) then merge with it through the normal
     snapshot re-aggregation — exact for decomposable measures even
     when history and stream overlap a window. Refuses non-fresh
     directories."""
-    spark = history_df.sparkSession
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath) and any(
-        st.getPath().getName().startswith("epoch=")
-        for st in fs.listStatus(jpath)
-    ):
-        raise ValueError(
-            "rollup_bootstrap: state_dir already contains epochs — "
-            "bootstrap only initializes fresh directories"
-        )
+    require_fresh(history_df.sparkSession, "rollup_bootstrap", state_dir=state_dir)
     rollup_partials_batch(
         history_df, -1, state_dir, event_time, keys, measures, grain
     )

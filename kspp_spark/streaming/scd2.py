@@ -4,9 +4,8 @@ The streaming face of operators/aggregates.scd2_history: each
 micro-batch folds its changes into the OPEN versions only — newly
 closed intervals append to a history area, the new open set replaces
 the state snapshot — so per-trigger work is O(batch + open keys),
-never a recompute over all history. Same epoch-idempotent parquet
-convention as streaming/dedup_incremental and streaming/rollup
-(overwrite-by-epoch => checkpoint-recovery replays are safe).
+never a recompute over all history. Both areas live in the epoch-fold
+store (streaming/epochs: layout, reset guards, stream wiring).
 
 Correctness window: a change folds correctly as long as it is not
 older than an ALREADY-CLOSED interval of its key (closed history is
@@ -23,17 +22,21 @@ beyond-reference north-star operator.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 from kspp_spark.io import fs_delete
 from kspp_spark.operators.aggregates import scd2_history
-from kspp_spark.streaming.epochs import epoch_dirs
+from kspp_spark.streaming.epochs import (
+    epoch_dirs,
+    fold_stream,
+    guard_epoch_monotonic,
+    require_fresh,
+    write_epoch,
+)
 
 
-# shared epoch machinery lives in streaming/epochs; the private alias
-# stays importable for back-compat
+# the module-level name the prior-state listing goes through (tests
+# substitute it to inject an unprunable snapshot)
 _epoch_dirs = epoch_dirs
 
 
@@ -66,22 +69,12 @@ def scd2_fold_batch(
     cols = [*keys, *value_cols, event_time, *([seq] if seq else [])]
     changes = batch_df.select(*cols)
 
-    all_epochs = _epoch_dirs(spark, state_dir)
-    hist_ahead = [e for e, _ in _epoch_dirs(spark, history_dir) if e > int(epoch_id)]
-    if any(e > int(epoch_id) for e, _ in all_epochs) or hist_ahead:
-        # epoch ids restarted (fresh checkpoint) against retained state
-        # OR against retained history (state_dir pruned but history_dir
-        # kept): folding would silently re-read stale open versions
-        # and/or OVERWRITE immutable history epochs — refuse loudly
-        raise ValueError(
-            "scd2 state/history contains epochs newer than the current "
-            "trigger: the checkpoint was reset against an existing "
-            "state_dir/history_dir. Resume with the original checkpoint, "
-            "or reprocess into fresh state_dir/history_dir."
-        )
+    # retained history counts too (state_dir pruned, history_dir kept):
+    # a reset would otherwise OVERWRITE immutable history epochs
+    guard_epoch_monotonic(spark, epoch_id, "scd2_fold_batch", state_dir, history_dir)
     # strictly-before epochs only: a checkpoint-recovery replay of
     # epoch N (whose own state N already exists) rebuilds from N-1
-    epochs = [(e, p) for e, p in all_epochs if e < int(epoch_id)]
+    epochs = [(e, p) for e, p in _epoch_dirs(spark, state_dir) if e < int(epoch_id)]
     if epochs:
         prior = spark.read.parquet(epochs[-1][1])
         open_rows = prior.select(
@@ -118,12 +111,8 @@ def scd2_fold_batch(
             *keys, F.col(event_time).alias("valid_from")
         ).agg(F.max(seq).alias(seq))
         open_new = open_new.join(seq_src, [*keys, "valid_from"], "left")
-    closed.write.mode("overwrite").parquet(
-        os.path.join(history_dir, f"epoch={int(epoch_id)}")
-    )
-    open_new.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"epoch={int(epoch_id)}")
-    )
+    write_epoch(closed, history_dir, epoch_id)
+    write_epoch(open_new, state_dir, epoch_id)
     # (the localCheckpoint blocks are released by the ContextCleaner
     # once `versioned` goes out of scope — no explicit unpersist)
     # prune old state snapshots (each is self-contained); a failed
@@ -141,18 +130,13 @@ def scd2_stream(
 ):
     """Wire a changelog stream into the SCD2 fold loop. Returns the
     started StreamingQuery; `scd2_snapshot` serves the full history."""
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        scd2_fold_batch(
+    return fold_stream(
+        stream_df,
+        checkpoint,
+        lambda batch_df, epoch_id: scd2_fold_batch(
             batch_df, epoch_id, state_dir=state_dir, history_dir=history_dir,
             **kwargs,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        ),
     )
 
 
@@ -273,12 +257,7 @@ def scd2_enrich_stream(
         )
         sink(enriched, epoch_id)
 
-    return (
-        facts_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(facts_stream, checkpoint, handle)
 
 
 def scd2_bootstrap(
@@ -300,29 +279,12 @@ def scd2_bootstrap(
     the bootstrap state up through the normal strictly-before-epoch
     read. Refuses to run over dirs that already hold epochs.
     """
-    spark = changelog_df.sparkSession
-    if _epoch_dirs(spark, state_dir) or _epoch_dirs(spark, history_dir):
-        raise ValueError(
-            "scd2_bootstrap: state_dir/history_dir already contain epochs — "
-            "bootstrap only initializes fresh directories"
-        )
-    keys = [key] if isinstance(key, str) else list(key)
-    versioned = scd2_history(
-        changelog_df,
-        key=keys,
-        value_cols=value_cols,
-        event_time=event_time,
-        seq=seq,
-        tombstone_col=tombstone_col,
-    ).localCheckpoint(eager=True)
-    closed = versioned.filter(F.col("valid_to").isNotNull()).drop("is_current")
-    open_new = versioned.filter(F.col("valid_to").isNull()).drop(
-        "valid_to", "is_current"
+    require_fresh(
+        changelog_df.sparkSession, "scd2_bootstrap",
+        state_dir=state_dir, history_dir=history_dir,
     )
-    if seq:
-        seq_src = changelog_df.groupBy(
-            *keys, F.col(event_time).alias("valid_from")
-        ).agg(F.max(seq).alias(seq))
-        open_new = open_new.join(seq_src, [*keys, "valid_from"], "left")
-    closed.write.mode("overwrite").parquet(os.path.join(history_dir, "epoch=-1"))
-    open_new.write.mode("overwrite").parquet(os.path.join(state_dir, "epoch=-1"))
+    scd2_fold_batch(
+        changelog_df, -1, state_dir, history_dir, key=key,
+        value_cols=value_cols, event_time=event_time, seq=seq,
+        tombstone_col=tombstone_col,
+    )

@@ -596,14 +596,14 @@ def test_srp_sampler_single_shuffle_no_python(spark, queries):
 
 def test_boilerplate_clean_rewrite_is_map_side(spark, queries):
     """Boilerplate-removal scale contract: document text never enters
-    a HASH exchange — the detector's count-distinct agg and the
+    a HASH exchange — the detector's per-digest count agg and the
     one-row collect_set shuffle digests only — and the rewrite joins
     the broadcast digest set (BroadcastNestedLoopJoin), never a
     shuffled join. No reassembly aggregation exists and no Python runs
-    anywhere. (The graded query's opt-in small-input rebalance is a
+    anywhere. (The graded query's io.rebalance_small_scan is a
     ROUND-ROBIN exchange of the raw scan rows — one narrow pass,
-    exempt from the no-text rule; at real scale callers leave
-    repartition_to=None and it disappears.)"""
+    exempt from the no-text rule; on cluster-sized scans its
+    condition never fires and it disappears.)"""
     plan = formatted_plan(spark, queries["boilerplate_clean"](spark, SF))
     assert "BatchEvalPython" not in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
@@ -613,7 +613,7 @@ def test_boilerplate_clean_rewrite_is_map_side(spark, queries):
         plan,
     )
     assert blocks, "no Exchange detail sections parsed — regex drifted"
-    # <= 2 hash exchanges (count-distinct partial+final) carrying
+    # <= 2 hash exchanges (count partial+final) carrying
     # digests only; 1 SinglePartition for the one-row collect_set; up
     # to 2 round-robin rebalances (detector + rewrite subtrees both
     # consume the conditionally-rebalanced scan)

@@ -2248,6 +2248,49 @@ def test_seq_mode_migration_from_seqless_state(spark, tmp_path):
     assert "one" not in got  # doc 1's legacy rows superseded
 
 
+def test_dedup_seq_mode_migration_from_seqless_state(spark, tmp_path):
+    """The dedup store follows the same migration rule as the index
+    store: bands folded before seq_col was adopted carry NULL _seq and
+    rank below every real seq (even seq 0), so seq-ed updates and
+    deletes supersede them, while a doc present only in the legacy
+    epochs keeps probing."""
+    from kspp_spark.streaming.dedup_incremental import probe_and_update
+
+    state = str(tmp_path / "state")
+    pairs_dir = str(tmp_path / "pairs")
+    text_a = "the quick brown fox jumps over the lazy dog again and again"
+    text_b = "completely different content about spark aggregation plans here"
+    text_c = "a third unrelated sentence on parquet files and epoch directories"
+    text_d = "yet another document describing kafka offsets and consumer groups"
+
+    probe_and_update(
+        spark.createDataFrame(
+            [(1, text_a), (2, text_b), (3, text_d)], "doc_id long, text string"
+        ),
+        0, state, pairs_dir,
+    )
+    seq_schema = "doc_id long, text string, seq long"
+    # the lowest real seq still beats the legacy rows: doc 1 -> C, doc 3 deleted
+    probe_and_update(
+        spark.createDataFrame([(1, text_c, 0), (3, None, 0)], seq_schema),
+        1, state, pairs_dir, seq_col="seq",
+    )
+    probe_and_update(
+        spark.createDataFrame(
+            [(10, text_a, 5), (11, text_b, 5), (12, text_c, 5), (13, text_d, 5)],
+            seq_schema,
+        ),
+        2, state, pairs_dir, seq_col="seq",
+    )
+    got = sorted(
+        (r.new_id, r.dup_of)
+        for r in spark.read.parquet(str(tmp_path / "pairs" / "epoch=2")).collect()
+    )
+    # 10 finds nothing (doc 1's legacy A lost), 11 finds legacy-only
+    # doc 2, 12 finds doc 1's seq-ed C, 13 finds nothing (doc 3 deleted)
+    assert got == [(11, 2), (12, 1)]
+
+
 def test_boilerplate_fold_matches_batch_and_handles_changelog(spark, tmp_path):
     """Streaming boilerplate-frequency fold: (1) the snapshot over
     appended batches equals the batch detector over the full corpus;
